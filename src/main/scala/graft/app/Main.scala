@@ -22,8 +22,14 @@ object Main {
 
   final case class LoadSummary(name: String, found: Boolean, rows: Long)
 
+  val Usage = "usage: graft.app.Main <inputRoot> <lookupRoot> <outputFolder>"
+
   def main(args: Array[String]): Unit = {
-    val Array(inputRoot, lookupRoot, outFolder) = args.take(3)
+    val (inputRoot, lookupRoot, outFolder) = args match {
+      case Array(in, lookups, out) => (in, lookups, out)
+      case _ => throw new IllegalArgumentException(
+        s"expected 3 arguments, got ${args.length}; $Usage")
+    }
     val spark = Sessions.local()
     val storage = new LocalFsStorage
     val clock = Clock.systemUTC()
@@ -79,8 +85,9 @@ object Main {
     val written = scala.collection.mutable.ArrayBuffer.empty[String]
 
     // each pipeline's build→materialize→write unit runs under a tracking
-    // CacheScope: any operator-internal persist made while the pipeline
-    // builds is freed when its writes complete — the bounded-lifetime
+    // CacheScope: the pipeline's persisted result, which both sinks read,
+    // and any operator-internal persist made while the pipeline builds
+    // are freed when its writes complete — the bounded-lifetime
     // contract on the PRODUCTION path, not just in tests. Pinned executor
     // memory across pipeline units is the long-lived-session failure mode
     // this closes (the sinks inside the scope are the materialization).

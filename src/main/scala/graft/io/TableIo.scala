@@ -230,7 +230,8 @@ object TableIo {
     * (post-aggregation pipeline results), so the bytes are assembled
     * driver-side and written through the StorageClient — this is the
     * collect-and-write path the survey documents; large results would use
-    * df.write.csv. Timestamps are rendered ISO `yyyy-MM-dd HH:mm:ss`
+    * df.write.csv. Rows are ordered by `_ingest_ord` on the driver after
+    * the collect. Timestamps are rendered ISO `yyyy-MM-dd HH:mm:ss`
     * (pandas default). */
   def writeCsv(df: DataFrame, storage: StorageClient, folder: String,
                name: String): String =
@@ -245,9 +246,7 @@ object TableIo {
   def csvBytes(df: DataFrame): Array[Byte] = {
     import java.time.ZoneOffset
     import java.time.format.DateTimeFormatter
-    val out = DedupOps.sortAndDropOrdinal(df)
-    val fields = out.schema.fields
-    val rows = out.collect() // small-by-contract sink (post-aggregation)
+    val (fields, rows) = collectInIngestOrder(df)
     val isTs = fields.map(_.dataType == TimestampType)
     def instantAt(r: Row, i: Int): java.time.Instant = r.get(i) match {
       case t: java.sql.Timestamp => t.toInstant
@@ -286,25 +285,40 @@ object TableIo {
     sb.toString.getBytes("UTF-8")
   }
 
-  /** S7 — XLSX sink, mirror of S4 (ref 410-417, 620-627). */
+  /** S7 — XLSX sink, mirror of S4 (ref 410-417, 620-627), rows in ingest
+    * order like S6. Every column renders to a string cell; timestamps ISO
+    * `yyyy-MM-dd HH:mm:ss`. */
   def writeXlsx(df: DataFrame, storage: StorageClient, folder: String,
                 name: String): String = {
-    val out = DedupOps.sortAndDropOrdinal(df)
-    storage.writeBytes(folder, name, Xlsx.write(out.columns.toSeq, stringRows(out)))
-  }
-
-  /** Render every column to Option[String]; timestamps ISO, seconds
-    * precision when sub-second is zero (pandas CSV rendering). */
-  private def stringRows(df: DataFrame): Seq[Seq[Option[String]]] = {
     val rendered = df.select(df.schema.fields.map { f =>
       f.dataType match {
+        case _ if f.name == DedupOps.OrdinalCol => col(f.name)
         case TimestampType =>
           date_format(col(f.name), "yyyy-MM-dd HH:mm:ss").as(f.name)
         case _ => col(f.name).cast(StringType).as(f.name)
       }
     }.toIndexedSeq: _*)
-    rendered.collect().toSeq.map(r =>
-      r.toSeq.map(v => Option(v).map(_.toString)))
+    val (fields, rows) = collectInIngestOrder(rendered)
+    val cells = rows.toSeq.map(r => fields.indices.map(i => Option(r.getString(i))))
+    storage.writeBytes(folder, name, Xlsx.write(fields.map(_.name).toSeq, cells))
+  }
+
+  /** Collect a small-by-contract sink frame (post-aggregation pipeline
+    * output) in ingest order. When `df` carries `_ingest_ord`, the rows
+    * are sorted by it HERE, on the driver, and the ordinal is dropped:
+    * the sink collects every row anyway, so a global `orderBy` would only
+    * add a range-partition sample job and a sort exchange. The sort is
+    * stable and independent of the frame's partitioning. A frame without
+    * the ordinal keeps its collect order. */
+  private def collectInIngestOrder(df: DataFrame): (Array[StructField], Array[Row]) = {
+    val all = df.schema.fields
+    val ordIdx = all.indexWhere(_.name == DedupOps.OrdinalCol)
+    if (ordIdx < 0) (all, df.collect())
+    else {
+      val keep = all.indices.filter(_ != ordIdx)
+      val rows = df.collect().sortBy(_.getLong(ordIdx))
+      (keep.map(all).toArray, rows.map(r => Row.fromSeq(keep.map(r.get))))
+    }
   }
 
   // pandas' C writer (lineterminator '\n', QUOTE_MINIMAL) quotes a field

@@ -11,14 +11,16 @@ import scala.collection.mutable
   * frame, [[graft.operators.DedupOperators]]' band/batch indexes and
   * dedupCorpus exact frame, [[graft.operators.SetSimJoin]]'s set/prefix
   * streams, [[graft.operators.ContainmentJoin]]'s postings,
-  * [[graft.operators.MarketBasket]]'s basket basis, and [[PrefixSumOps]]'
-  * input/ranged frames. The operator cannot unpersist before returning —
-  * the cache must outlive the caller's first materialization of the
-  * result — so each such persist is registered with the implicit
-  * [[CacheScope]] in effect. (Iterative operators that materialize
-  * per-round and free their own frames — GraphOps, clusterPairs — keep
-  * their explicit internal unpersists; nothing of theirs outlives the
-  * returned result's materialization.)
+  * [[graft.operators.MarketBasket]]'s basket basis, [[PrefixSumOps]]'
+  * input/ranged frames, and the outputs of [[graft.pipeline.PuaPipeline]]
+  * and [[graft.pipeline.CpaPipeline]], which both sinks of a run read.
+  * The operator cannot unpersist before returning — the cache must
+  * outlive the caller's first materialization of the result — so each
+  * such persist is registered with the implicit [[CacheScope]] in effect.
+  * (Iterative operators that materialize per-round and free their own
+  * frames — GraphOps, clusterPairs — keep their explicit internal
+  * unpersists; nothing of theirs outlives the returned result's
+  * materialization.)
   *
   *   - the default [[CacheScope.session]] scope tracks nothing: internal
   *     caches live until `spark.catalog.clearCache()` (the Verify/Bench

@@ -168,12 +168,6 @@ object DedupOps {
       .agg(min(col(OrdinalCol)).as(OrdinalCol))
   }
 
-  /** Sort by ingest ordinal and drop it — final step before a sink so output
-    * row order matches the reference's frame order (SURVEY §2.1 sorts). */
-  def sortAndDropOrdinal(df: DataFrame): DataFrame =
-    if (df.columns.contains(OrdinalCol)) df.orderBy(col(OrdinalCol)).drop(OrdinalCol)
-    else df
-
   /** C4-style line-level corpus dedup, with non-overlapping `segTokens`-token
     * segments standing in for lines: a segment occurring anywhere else in the
     * corpus survives only at its first (doc_id, segment) position, and every

@@ -47,8 +47,8 @@ object CpaPipeline {
     "TS-Org Title", "TS-Org Dept Code", "TS-Org Dept Title", "E-Class Code",
     "E-Class", "TE M", "Time Entry", "Overtime")
 
-  /** The implicit [[CacheScope]] owns any operator-internal persist made
-    * while the pipeline builds — see [[PuaPipeline.run]]. */
+  /** The result is persisted through the implicit [[CacheScope]], so both
+    * sinks read one materialization — see [[PuaPipeline.run]]. */
   def run(in: Inputs, clock: Clock)(implicit scope: CacheScope): DataFrame = {
     import ColumnOps._
     val ord = DedupOps.OrdinalCol
@@ -152,7 +152,7 @@ object CpaPipeline {
       "TS-Org Department Name" -> "TS-Org Dept Title",
       "JOB_ECLS" -> "E-Class Code", "E-Class Description" -> "E-Class",
       "Overtime FLSA" -> "Overtime"))
-    df.select((FinalColumns.map(col) :+ col(ord)): _*)
+    scope.persist(df.select((FinalColumns.map(col) :+ col(ord)): _*))
   }
 
   /** D14 with exclusions for engine bookkeeping columns. */

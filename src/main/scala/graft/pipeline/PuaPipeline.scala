@@ -60,10 +60,13 @@ object PuaPipeline {
     "ADJ Reason Code", "ADJ Reason DESC", "Calc Date", "Pay Event",
     "POSN", "SUFF")
 
-  /** The implicit [[CacheScope]] owns any operator-internal persist made
-    * while the pipeline builds (none today, but the contract is part of
-    * the production path: Main wraps each build-materialize-write unit in
-    * `CacheScope.using`, so added scoped ops free with the unit). */
+  /** The result is persisted through the implicit [[CacheScope]]: the
+    * first sink that collects it fills the cache and the second only
+    * scans it, so the plan runs once per CSV+XLSX write pair (the
+    * reference writes both from one in-memory frame). Main wraps each
+    * build-materialize-write unit in `CacheScope.using`, which frees the
+    * cache once the writes finish; under the default session scope it
+    * lives until `clearCache()`. */
   def run(in: Inputs)(implicit scope: CacheScope): DataFrame = {
     import ColumnOps._
     val ord = DedupOps.OrdinalCol
@@ -165,7 +168,7 @@ object PuaPipeline {
     out = out
       .withColumnRenamed("TS Org", "TS ORG")
       .withColumnRenamed("Adjustment Reason", "Adjustment Reason Description")
-    out
+    scope.persist(out)
   }
 
   /** ref 319-322 / 370-374: every column except Calc Date →
