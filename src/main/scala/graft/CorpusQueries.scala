@@ -1574,11 +1574,13 @@ object CorpusQueries {
     * and verify the common-prefix length >= tau; the evidence is graded
     * (the actual shared length), not fixed-granularity.
     *
-    * Prefix length = size(filter(sequence(1, m), i -> prefix_i(a) =
-    * prefix_i(b))) — prefix equality is monotone, so the indicator sum
-    * IS the prefix length; the identical spelling runs in both engines
-    * (no fold-semantics hazard). O(window²) chars per pair, pairs are
-    * (w−1)·N — data-independent fan-out, x95's no-hot-block property.
+    * Prefix length = an ascending CASE chain over positions 1..window:
+    * the first position whose 1-char substrings differ yields that
+    * position − 1, and a pair with no differing position yields the
+    * shorter span's length. Prefix equality is monotone, so the first
+    * mismatch pins the LCP. O(window) single-char compares per pair,
+    * pairs are (w−1)·N — data-independent fan-out, x95's no-hot-block
+    * property.
     *
     * Scale shape: anchors are one precompiled pass per row (CdcBounds);
     * the global sort rank is the range-split prefix-sum kernel (never a
@@ -1619,8 +1621,9 @@ object CorpusQueries {
     // 1-char substring pins LCP = i - 1 and the ascending CASE chain
     // short-circuits there; if no position in 1..window differs, the
     // shorter span is a prefix of the longer and LCP = min(la, lb)
-    // (substring past a span's end yields "" and differs from the longer
-    // side's char, so the prefix-of case never stops early). Every arm
+    // (when one span is a strict prefix of the other, substring past its
+    // end yields "", which differs from the longer side's char at
+    // position min + 1, so the chain stops there with min). Every arm
     // is a codegen'd single-char compare — r17: replaces the interpreted
     // sequence/filter HOF that allocated and compared 2·min(la,lb)
     // PREFIX substrings per pair through per-element lambda dispatch

@@ -1,7 +1,12 @@
 package graft.app
 
 import java.time.Clock
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable.ArrayBuffer
+import scala.concurrent.Await
+import scala.concurrent.duration._
+import scala.util.{Failure, Success, Try}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 import graft.Sessions
 import graft.io.TableIo
 import graft.ops.DateOps
@@ -20,8 +25,6 @@ import graft.storage.{Catalog, LocalFsStorage, StorageClient}
   */
 object Main {
 
-  final case class LoadSummary(name: String, found: Boolean, rows: Long)
-
   val Usage = "usage: graft.app.Main <inputRoot> <lookupRoot> <outputFolder>"
 
   def main(args: Array[String]): Unit = {
@@ -37,26 +40,56 @@ object Main {
     spark.stop()
   }
 
+  /** How long the load summary waits for an observation that a completed
+    * pipeline's scan reported. The listener bus delivers it
+    * asynchronously, normally within milliseconds, but drops events when
+    * its queue is full; the count is then taken with a job instead. */
+  private val ObservationWait = 10.seconds
+
+  /** A loaded CSV whose row count is observed by the first query that
+    * scans it: the load summary reads the count of a frame a completed
+    * pipeline consumed from that observation, at no Spark job of its own,
+    * and counts only a frame no pipeline read, whose observation cannot
+    * fire. */
+  private final class ObservedCsv(loaded: DataFrame, label: String) {
+    private val observation = Observation(s"load $label")
+    val df: DataFrame = loaded.observe(observation, count(lit(1)))
+    /** set once a pipeline that read `df` has written its sinks */
+    var consumed = false
+
+    def rows: Long =
+      if (!consumed) df.count()
+      else Try(Await.result(observation.future, ObservationWait)) match {
+        case Success(metrics) => metrics.getLong(0)
+        case Failure(_) =>
+          System.err.println(
+            s"[graft] WARN: no row-count observation for '$label' — counting")
+          df.count()
+      }
+  }
+
   def run(spark: SparkSession, storage: StorageClient, inputRoot: String,
           lookupRoot: String, outFolder: String, clock: Clock): Seq[String] = {
     val catalog = Catalog.build(spark, storage, inputRoot)
     val lookupCatalog = Catalog.build(spark, storage, lookupRoot)
-    val summaries = scala.collection.mutable.ArrayBuffer.empty[LoadSummary]
+    // the load summary (ref 179-194), one line per input in load order:
+    // its row count, or None when the input was not found. The lines print
+    // after the sinks, when the pipelines' scans have observed the counts.
+    val summaries = ArrayBuffer.empty[(String, Option[() => Long])]
 
-    def loadCsvByName(name: String, trimHeaders: Boolean = false): Option[DataFrame] = {
-      val m = Catalog.firstMatch(lookupCatalog, Catalog.nameEquals(name))
-      val df = m.map(f => TableIo.readCsv(spark, f.file_path, trimHeaders))
-      summaries += LoadSummary(name, df.isDefined, df.map(_.count()).getOrElse(0L))
-      if (df.isEmpty) System.err.println(s"[graft] WARN: input '$name' not found — skipping")
-      df
+    def loadCsv(label: String, pred: Column): Option[ObservedCsv] = {
+      val csv = Catalog.firstMatch(lookupCatalog, pred)
+        .map(f => new ObservedCsv(TableIo.readCsv(spark, f.file_path), label))
+      summaries += label -> csv.map(c => () => c.rows)
+      csv
     }
-    def loadCsvContaining(sub: String): Option[DataFrame] = {
-      val m = Catalog.firstMatch(lookupCatalog,
-        Catalog.nameContains(sub) && Catalog.hasExtension(".csv"))
-      val df = m.map(f => TableIo.readCsv(spark, f.file_path))
-      summaries += LoadSummary(s"*$sub*", df.isDefined, df.map(_.count()).getOrElse(0L))
-      df
+    def loadCsvByName(name: String): Option[ObservedCsv] = {
+      val csv = loadCsv(name, Catalog.nameEquals(name))
+      if (csv.isEmpty) System.err.println(s"[graft] WARN: input '$name' not found — skipping")
+      csv
     }
+    def loadCsvContaining(sub: String): Option[ObservedCsv] =
+      loadCsv(s"*$sub*", Catalog.nameContains(sub) && Catalog.hasExtension(".csv"))
 
     // primary PUA extract: substring "PUA" + Excel extension (ref 67-70)
     val puaFile = Catalog.firstMatch(catalog,
@@ -66,12 +99,13 @@ object Main {
     // parity but never consumed (SURVEY.md §0 dead inputs)
     val cpaDead = Catalog.firstMatch(catalog,
       Catalog.nameMatchesBounded("CPA") && Catalog.hasExtension(".xlsx", ".xls"))
-    summaries += LoadSummary("*CPA*.xlsx (unused)", cpaDead.isDefined, 0L)
+    summaries += "*CPA*.xlsx (unused)" -> cpaDead.map(_ => () => 0L)
     val ytdDead = Catalog.firstMatch(lookupCatalog,
       Catalog.nameContains("YTD") && Catalog.hasExtension(".xlsx", ".xls"))
-    ytdDead.foreach { f => // loaded-but-never-consumed, like the reference
-      val df = TableIo.readXlsx(spark, storage, f.file_path)
-      summaries += LoadSummary(f.file_name + " (unused)", found = true, df.count())
+    ytdDead.foreach { f => // decoded like the reference, so a malformed
+      // workbook still fails loudly; its row count needs no DataFrame
+      val rows = TableIo.decodeXlsx(storage, f.file_path)._2.size.toLong
+      summaries += s"${f.file_name} (unused)" -> Some(() => rows)
     }
     loadCsvByName("Feeder_List.csv")
 
@@ -82,7 +116,7 @@ object Main {
     val certBw = loadCsvContaining("BW")
     val certMn = loadCsvContaining("MN")
 
-    val written = scala.collection.mutable.ArrayBuffer.empty[String]
+    val written = ArrayBuffer.empty[String]
 
     // each pipeline's build→materialize→write unit runs under a tracking
     // CacheScope: the pipeline's persisted result, which both sinks read,
@@ -91,27 +125,32 @@ object Main {
     // contract on the PRODUCTION path, not just in tests. Pinned executor
     // memory across pipeline units is the long-lived-session failure mode
     // this closes (the sinks inside the scope are the materialization).
-    for (p <- pua; o <- tsOrg; d <- tsDept; ot <- overtime; te <- teM)
+    for (p <- pua; o <- tsOrg; d <- tsDept; ot <- overtime; te <- teM) {
       graft.ops.CacheScope.using { implicit scope =>
-        val out = PuaPipeline.run(PuaPipeline.Inputs(p, o, d, ot, te))
+        val out = PuaPipeline.run(PuaPipeline.Inputs(p, o.df, d.df, ot.df, te.df))
         written += TableIo.writeCsv(out, storage, outFolder,
           DateOps.stampedName("PUA", ".csv", clock))
         written += TableIo.writeXlsx(out, storage, outFolder,
           DateOps.stampedName("PUA", ".xlsx", clock))
       }
+      Seq(o, d, ot, te).foreach(_.consumed = true)
+    }
     for (bw <- certBw; mn <- certMn; o <- tsOrg; d <- tsDept;
-         ot <- overtime; te <- teM)
+         ot <- overtime; te <- teM) {
       graft.ops.CacheScope.using { implicit scope =>
         val out = CpaPipeline.run(
-          CpaPipeline.Inputs(bw, mn, o, d, ot, te), clock)
+          CpaPipeline.Inputs(bw.df, mn.df, o.df, d.df, ot.df, te.df), clock)
         written += TableIo.writeCsv(out, storage, outFolder,
           DateOps.stampedName("CPA", ".csv", clock))
         written += TableIo.writeXlsx(out, storage, outFolder,
           DateOps.stampedName("CPA", ".xlsx", clock))
       }
+      Seq(bw, mn, o, d, ot, te).foreach(_.consumed = true)
+    }
 
-    summaries.foreach(s =>
-      println(s"[graft] load ${s.name}: found=${s.found} rows=${s.rows}"))
+    summaries.foreach { case (name, rows) =>
+      println(s"[graft] load $name: found=${rows.isDefined} rows=${rows.fold(0L)(_())}")
+    }
     written.foreach(p => println(s"[graft] wrote $p"))
     written.toSeq
   }

@@ -1,6 +1,10 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import java.io.{BufferedReader, InputStreamReader}
+import java.nio.charset.StandardCharsets
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.io.compress.CompressionCodecFactory
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType, TimestampType}
 import graft.ops.DedupOps
@@ -16,17 +20,68 @@ import graft.storage.StorageClient
   */
 object TableIo {
 
-  /** S5 — CSV source: header row, all columns string, headers trimmed on
-    * request (P6 applies only to the CPA certs — ref 433-434). */
+  /** S5 — CSV source: header record, all columns string, headers trimmed
+    * on request (P6 applies only to the CPA certs — ref 433-434). Quoted
+    * fields may hold line breaks (`multiLine`), as the CSV sink writes
+    * them and pandas `read_csv` reads them back (ref 113-139, 159-173). A
+    * multiLine file reads as one split: fine for the small-by-contract
+    * payroll lookups, whose ordinal then follows file order; the scale
+    * path is [[readParquetOrdered]].
+    *
+    * No Spark job runs here. The header record is read on the driver
+    * ([[headerRecord]]) and named by Spark's own header rules — an empty
+    * cell becomes `_c<i>`, a duplicate name gets its index appended —
+    * through `csv(Dataset[String])` over a one-row local relation. The file
+    * is then read with that explicit all-string schema, so no inference
+    * pass scans it; Spark skips the header record itself. */
   def readCsv(spark: SparkSession, path: String,
               trimHeaders: Boolean = false): DataFrame = {
-    val df = spark.read
-      .option("header", "true")
-      .option("inferSchema", "false")
-      .option("escape", "\"") // RFC-style doubled quotes (pandas default)
-      .csv(path)
+    val options = Map(
+      "header" -> "true",
+      "inferSchema" -> "false",
+      "multiLine" -> "true",
+      "escape" -> "\"") // RFC-style doubled quotes (pandas default)
+    val schema = spark.read.options(options)
+      .csv(spark.createDataset(headerRecord(spark, path).toSeq)(Encoders.STRING))
+      .schema
+    val df = spark.read.options(options).schema(schema).csv(path)
     val named = if (trimHeaders) graft.ops.ReshapeOps.trimHeaders(df) else df
     DedupOps.withIngestOrdinal(named)
+  }
+
+  /** The first non-empty record of the CSV file at `path`, read through
+    * the Hadoop FileSystem (decompressed by extension, as Spark reads it).
+    * A quote opens a quoted field only at the field's start, and inside
+    * one a doubled quote is an escaped quote; the record ends at the first
+    * line break outside a quoted field, so it may span lines. `None` when
+    * the file holds no record. */
+  private def headerRecord(spark: SparkSession, path: String): Option[String] = {
+    val file = new Path(path)
+    val conf = spark.sessionState.newHadoopConf()
+    val raw = file.getFileSystem(conf).open(file)
+    val in = Option(new CompressionCodecFactory(conf).getCodec(file))
+      .fold[java.io.InputStream](raw)(_.createInputStream(raw))
+    val reader = new BufferedReader(new InputStreamReader(in, StandardCharsets.UTF_8))
+    try {
+      val record = new StringBuilder
+      var fieldStart = true  // next char is the first of a field
+      var quotedField = false
+      var inQuotes = false
+      def isBreak(c: Int) = c == '\n' || c == '\r'
+      var c = reader.read()
+      // a break outside quotes ends the record; leading empty lines are skipped
+      while (c >= 0 && (inQuotes || !isBreak(c) || record.isEmpty)) {
+        if (inQuotes || !isBreak(c)) record.append(c.toChar)
+        if (c == '"' && (fieldStart || quotedField)) {
+          quotedField = true
+          inQuotes = !inQuotes
+        }
+        fieldStart = !inQuotes && (c == ',' || isBreak(c))
+        if (fieldStart) quotedField = false
+        c = reader.read()
+      }
+      Option(record.toString).filter(_.nonEmpty)
+    } finally reader.close()
   }
 
   /** Parquet source with a SCALE-SAFE ingest ordinal (H4): ordinal =
@@ -212,10 +267,7 @@ object TableIo {
     * mislabeled files are common. */
   def readXlsx(spark: SparkSession, storage: StorageClient,
                path: String, sheetName: Option[String] = None): DataFrame = {
-    val bytes = storage.readBytes(path)
-    val (header, rows) =
-      if (Xls.isOle2(bytes)) Xls.readTable(bytes, sheetName)
-      else Xlsx.readTable(bytes, sheetName)
+    val (header, rows) = decodeXlsx(storage, path, sheetName)
     val schema = StructType(header.map(c => StructField(c, StringType, nullable = true)) :+
       StructField(DedupOps.OrdinalCol, org.apache.spark.sql.types.LongType, nullable = false))
     val data = rows.zipWithIndex.map { case (r, i) =>
@@ -223,6 +275,17 @@ object TableIo {
     }
     spark.createDataFrame(
       spark.sparkContext.parallelize(data.toSeq, 1), schema)
+  }
+
+  /** [[readXlsx]]'s driver-side decode alone: the (header, rows) of the
+    * workbook at `path`, with no DataFrame built. A malformed workbook
+    * fails here with the codec's named cause. */
+  def decodeXlsx(storage: StorageClient, path: String,
+                 sheetName: Option[String] = None)
+      : (Seq[String], Seq[Seq[Option[String]]]) = {
+    val bytes = storage.readBytes(path)
+    if (Xls.isOle2(bytes)) Xls.readTable(bytes, sheetName)
+    else Xlsx.readTable(bytes, sheetName)
   }
 
   /** S6 — CSV sink: ONE file, header, UTF-8, no index column, rows in

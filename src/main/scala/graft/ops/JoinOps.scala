@@ -27,13 +27,6 @@ object JoinOps {
   def leftJoinExpr(df: DataFrame, lookup: DataFrame, cond: Column): DataFrame =
     df.join(broadcast(lookup), cond, "left")
 
-  /** J3 — J2 then drop the right-side key (ref 276-279). */
-  def leftJoinDropRightKey(df: DataFrame, lookup: DataFrame,
-                           leftKey: String, rightKey: String): DataFrame = {
-    val l = broadcast(lookup)
-    df.join(l, df(leftKey) === l(rightKey), "left").drop(l(rightKey))
-  }
-
   /** J7 — row-count-stability guard (`safe_merge_left`, ref 226-232): a left
     * join whose output row count is checked against the input. Implemented
     * with `observe` so the check costs no extra Spark job — the metric is

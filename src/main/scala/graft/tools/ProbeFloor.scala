@@ -8,8 +8,9 @@ import graft.{Sessions, SparkEntry}
   * against `SPARK_GRAFT_SF_DIR`. Each floor gets its own `newSession()`
   * (SQL confs are session-local; the shared cache is cleared between reps
   * exactly like Bench/TimeMany). Emits one `[probefloor]` stderr line per
-  * (query, floor, rep) and a `probefloor-med` warm median (rep 0 excluded
-  * when reps > 1). Built for the SCALING.md sf1 probe of the r17 64 KB
+  * (query, floor, rep) and a `probefloor-med` warm upper median (rep 0
+  * excluded when reps > 1; an even-sized warm set reports the slower of
+  * its two middle runs). Built for the SCALING.md sf1 probe of the r17 64 KB
   * floor: list floors A,B,A to guard against box drift. */
 object ProbeFloor {
   def main(args: Array[String]): Unit = {
@@ -37,7 +38,8 @@ object ProbeFloor {
         }
         val warm = if (reps > 1) times.drop(1) else times
         val med = warm.sorted.apply(warm.length / 2)
-        System.err.println(f"[probefloor-med] $name floor=$floor#$fi $med%.3f")
+        System.err.println(
+          f"[probefloor-med] $name floor=$floor#$fi $med%.3f (upper median)")
       }
     }
     base.stop()

@@ -1,5 +1,7 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -13,5 +15,33 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = {
     // shared across suites in one JVM; stopped by the last teardown is fine
     super.afterAll()
+  }
+
+  /** `body`'s result and the number of Spark jobs it started. The
+    * listener bus is async: a tagged one-task barrier job runs after
+    * `body`, and its start event is delivered after every job event queued
+    * before it, so the count is complete once the barrier is seen. */
+  def countingJobs[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val barrier = "graft.test.barrier"
+    val jobs = new AtomicInteger
+    val barriers = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty(barrier) != null))
+          barriers.incrementAndGet(): Unit
+        else jobs.incrementAndGet(): Unit
+    }
+    sc.addSparkListener(l)
+    try {
+      val result = body
+      sc.setLocalProperty(barrier, "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(barrier, null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (barriers.get() == 0 && System.nanoTime() < deadline) Thread.sleep(5)
+      assert(barriers.get() == 1, "listener bus did not drain in 30 s")
+      (result, jobs.get())
+    } finally sc.removeSparkListener(l)
   }
 }

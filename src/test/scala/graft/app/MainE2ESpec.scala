@@ -1,8 +1,9 @@
 package graft.app
 
+import java.io.ByteArrayOutputStream
 import java.nio.file.{Files, Path}
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+import org.scalatest.time.SpanSugar._
 import graft.SparkSpec
 import graft.io.{TableIo, Xlsx}
 import graft.pipeline.PayrollFixtures._
@@ -10,7 +11,10 @@ import graft.storage.LocalFsStorage
 
 /** End-to-end: fixture files on disk → catalog discovery → XLSX/CSV loads
   * → both pipelines → date-stamped CSV+XLSX sinks, with a pinned clock. */
-class MainE2ESpec extends SparkSpec {
+class MainE2ESpec extends SparkSpec with TimeLimits {
+
+  // interrupt a run that blocks (on an observation that never fires)
+  implicit val signaler: Signaler = ThreadSignaler
 
   private def csvBytes(cols: Seq[String], rows: Seq[Seq[Option[String]]]): Array[Byte] = {
     def cell(v: Option[String]) = v.map { s =>
@@ -21,15 +25,19 @@ class MainE2ESpec extends SparkSpec {
       rows.map(_.map(cell).mkString(",")).mkString("\n")).getBytes("UTF-8")
   }
 
-  /** Fixture files on disk; returns (inputs, lookups, output) folders. */
-  private def writeFixtures(): (Path, Path, Path) = {
+  /** Fixture files on disk; returns (inputs, lookups, output) folders.
+    * `pua` and `certs` drop the PUA workbook or both cert CSVs; `ytd` adds
+    * a three-row YTD workbook that no pipeline reads. */
+  private def writeFixtures(pua: Boolean = true, certs: Boolean = true,
+                            ytd: Boolean = false): (Path, Path, Path) = {
     val root = Files.createTempDirectory("graft_e2e")
     val inDir = root.resolve("inputs"); val lkDir = root.resolve("lookups")
     Files.createDirectories(inDir); Files.createDirectories(lkDir)
 
     // primary PUA extract as a real XLSX produced by our own codec
-    Files.write(inDir.resolve("Monthly PUA Extract.xlsx"),
-      Xlsx.write(PuaColumns, PuaRows))
+    if (pua)
+      Files.write(inDir.resolve("Monthly PUA Extract.xlsx"),
+        Xlsx.write(PuaColumns, PuaRows))
     // lookups + certs as CSVs with the reference's exact names/patterns
     Files.write(lkDir.resolve("TS_Org.csv"), csvBytes(TsOrgColumns, TsOrgRows))
     Files.write(lkDir.resolve("TS_Dept.csv"), csvBytes(TsDeptColumns, TsDeptRows))
@@ -38,20 +46,74 @@ class MainE2ESpec extends SparkSpec {
     Files.write(lkDir.resolve("TE_M.csv"), csvBytes(TeMColumns, TeMRows))
     Files.write(lkDir.resolve("Feeder_List.csv"),
       "col1\nv1\n".getBytes("UTF-8"))
-    Files.write(lkDir.resolve("Cert BW extract.csv"),
-      csvBytes(CertColumns, CertBwRows))
-    Files.write(lkDir.resolve("Cert MN extract.csv"),
-      csvBytes(CertColumns, CertMnRows))
+    if (certs) {
+      Files.write(lkDir.resolve("Cert BW extract.csv"),
+        csvBytes(CertColumns, CertBwRows))
+      Files.write(lkDir.resolve("Cert MN extract.csv"),
+        csvBytes(CertColumns, CertMnRows))
+    }
+    if (ytd)
+      Files.write(lkDir.resolve("YTD Summary.xlsx"), Xlsx.write(Seq("UIN", "YTD"),
+        Seq(Seq(Some("u1"), Some("10")), Seq(Some("u2"), None), Seq(Some("u3"), Some("7")))))
     (inDir, lkDir, root.resolve("out"))
   }
 
-  test("full payroll run: discovery, loads, pipelines, stamped sinks") {
-    val (inDir, lkDir, outDir) = writeFixtures()
-    val storage = new LocalFsStorage
+  /** Main.run on the given fixtures: the files it wrote and the
+    * `[graft] load` lines it printed. */
+  private def runMain(dirs: (Path, Path, Path)): (Seq[String], String) = {
+    val (inDir, lkDir, outDir) = dirs
+    val out = new ByteArrayOutputStream
+    val written = Console.withOut(out) {
+      Main.run(spark, new LocalFsStorage, inDir.toString, lkDir.toString,
+        outDir.toString, FixedClock)
+    }
+    (written, new String(out.toByteArray, "UTF-8").linesIterator
+      .filter(_.startsWith("[graft] load ")).mkString("", "\n", "\n"))
+  }
 
+  private val LookupLoadLines =
+    """[graft] load Feeder_List.csv: found=true rows=1
+      |[graft] load TS_Org.csv: found=true rows=4
+      |[graft] load TS_Dept.csv: found=true rows=3
+      |[graft] load Overtime_E_Class.csv: found=true rows=4
+      |[graft] load TE_M.csv: found=true rows=7
+      |""".stripMargin
+  private val CertLoadLines =
+    """[graft] load *BW*: found=true rows=4
+      |[graft] load *MN*: found=true rows=4
+      |""".stripMargin
+  private val NoCpaXlsx = "[graft] load *CPA*.xlsx (unused): found=false rows=0\n"
+
+  test("load summary without the PUA workbook: the CPA pipeline's scans report the lookups") {
+    failAfter(180.seconds) {
+      assert(runMain(writeFixtures(pua = false))._2 ==
+        NoCpaXlsx + LookupLoadLines + CertLoadLines)
+    }
+  }
+
+  test("load summary without the cert CSVs: the PUA pipeline's scans report the lookups") {
+    failAfter(180.seconds) {
+      assert(runMain(writeFixtures(certs = false))._2 ==
+        NoCpaXlsx + LookupLoadLines +
+          "[graft] load *BW*: found=false rows=0\n[graft] load *MN*: found=false rows=0\n")
+    }
+  }
+
+  test("load summary with a YTD workbook: its decoded rows are counted") {
+    failAfter(180.seconds) {
+      assert(runMain(writeFixtures(ytd = true))._2 == NoCpaXlsx +
+        "[graft] load YTD Summary.xlsx (unused): found=true rows=3\n" +
+        LookupLoadLines + CertLoadLines)
+    }
+  }
+
+  test("full payroll run: discovery, loads, pipelines, stamped sinks") {
+    val storage = new LocalFsStorage
     spark.catalog.clearCache() // known-clean baseline for the scope check
-    val written = Main.run(spark, storage, inDir.toString, lkDir.toString,
-      outDir.toString, FixedClock)
+    val (written, loads) = runMain(writeFixtures())
+
+    // the load summary, byte for byte (ref 179-194)
+    assert(loads == NoCpaXlsx + LookupLoadLines + CertLoadLines)
 
     // Main wraps each pipeline unit in CacheScope.using: every
     // operator-internal persist must be freed by the time run returns —
@@ -92,39 +154,20 @@ class MainE2ESpec extends SparkSpec {
   test("both sinks of a pipeline read one materialization; XLSX cells equal CSV fields") {
     val (inDir, lkDir, outDir) = writeFixtures()
     val storage = new LocalFsStorage
-    val sc = spark.sparkContext
-    val barrier = "graft.test.barrier"
-    val jobs = new AtomicInteger
-    val barriers = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (Option(js.properties).exists(_.getProperty(barrier) != null))
-          barriers.incrementAndGet(): Unit
-        else jobs.incrementAndGet(): Unit
-    }
     spark.catalog.clearCache()
-    sc.addSparkListener(l)
-    val written =
-      try {
-        val w = Main.run(spark, storage, inDir.toString, lkDir.toString,
-          outDir.toString, FixedClock)
-        // the listener bus is async: a tagged one-task job is delivered
-        // after every job event queued before it
-        sc.setLocalProperty(barrier, "1")
-        try sc.parallelize(Seq(1), 1).count()
-        finally sc.setLocalProperty(barrier, null)
-        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-        while (barriers.get() == 0 && System.nanoTime() < deadline) Thread.sleep(5)
-        assert(barriers.get() == 1, "listener bus did not drain in 30 s")
-        w
-      } finally sc.removeSparkListener(l)
+    val (written, jobs) = countingJobs(Main.run(spark, storage, inDir.toString,
+      lkDir.toString, outDir.toString, FixedClock))
 
     // Measured on these fixtures: 79 jobs when each sink re-ran its
     // pipeline behind a global orderBy; 50 with one cached result per
-    // pipeline ordered on the driver. A second full execution of either
-    // pipeline adds more jobs than this budget leaves room for.
-    assert(jobs.get() <= 50,
-      s"Main.run took ${jobs.get()} Spark jobs — a sink recomputes its pipeline")
+    // pipeline ordered on the driver; 31 with the CSV headers named on the
+    // driver and the load summary taken from observations (the sinks' jobs
+    // plus Feeder_List's count). A second full execution of either
+    // pipeline, or a load-summary count of a frame a pipeline scanned,
+    // adds more jobs than this budget leaves room for.
+    assert(jobs <= 31,
+      s"Main.run took $jobs Spark jobs — a sink recomputes its pipeline, " +
+        "or the load summary scans an input a pipeline already read")
 
     // the XLSX sink writes the CSV sink's rows, in the same order; Calc
     // Date renders differently by design (date-only CSV vs ISO cells)

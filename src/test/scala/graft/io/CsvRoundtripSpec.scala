@@ -3,7 +3,7 @@ package graft.io
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
-import graft.ops.DedupOps
+import graft.ops.{DedupOps, ReshapeOps}
 import graft.storage.LocalFsStorage
 
 class CsvRoundtripSpec extends SparkSpec {
@@ -151,5 +151,54 @@ class CsvRoundtripSpec extends SparkSpec {
       .forall(_.dataType == org.apache.spark.sql.types.StringType))
     val rows = df.orderBy("_ingest_ord").select("A").collect().map(_.getString(0))
     assert(rows.toSeq == Seq("1", "2", "3"))
+  }
+
+  private def csvFile(content: String): String = {
+    val path = Files.createTempDirectory("graft_csv_hdr").resolve("in.csv")
+    Files.write(path, content.getBytes("UTF-8"))
+    path.toString
+  }
+
+  test("readCsv reads a quoted line break back as one field, as pandas does") {
+    import spark.implicits._
+    val df = Seq(("1", "plain"), ("2", "has\nnewline"), ("3", "a,b"))
+      .toDF("id", "tricky")
+      .withColumn("_ingest_ord", monotonically_increasing_id())
+    val back = TableIo.readCsv(spark, csvFile(new String(TableIo.csvBytes(df), "UTF-8")))
+      .orderBy("_ingest_ord").select("id", "tricky").collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq
+    assert(back == Seq(("1", "plain"), ("2", "has\nnewline"), ("3", "a,b")))
+  }
+
+  test("readCsv gives the schema and rows of Spark's inferred-header read") {
+    def inferred(path: String) = spark.read.option("header", "true")
+      .option("multiLine", "true").option("escape", "\"").csv(path)
+    val files = Seq(
+      "duplicate names" -> "a,b,a,B\n1,2,3,4\n",
+      "empty header cell" -> "a,,c\n1,2,3\n",
+      "quoted comma" -> "\"last, first\",id\n\"x, y\",1\n",
+      "quoted line break" -> "id,\"two\nlines\",\"q\"\"\"\n1,\"a\nb\",c\n",
+      "padded" -> " a , b ,c\n1, 2 ,3\n",
+      "CRLF" -> "a,b\r\n1,2\r\n",
+      "leading blank line" -> "\na,b\n1,2\n",
+      "UTF-8 BOM" -> "\uFEFFa,b\n1,2\n",
+      "header only" -> "a,b,c\n",
+      "empty file" -> "")
+    for ((what, content) <- files; trim <- Seq(false, true)) {
+      val path = csvFile(content)
+      val got = TableIo.readCsv(spark, path, trimHeaders = trim)
+      assert(got.columns.last == DedupOps.OrdinalCol, what)
+      val exp = if (trim) ReshapeOps.trimHeaders(inferred(path)) else inferred(path)
+      val data = got.drop(DedupOps.OrdinalCol)
+      assert(data.schema == exp.schema, s"$what, trimHeaders=$trim")
+      assert(data.collect().toSeq == exp.collect().toSeq, s"$what, trimHeaders=$trim")
+    }
+  }
+
+  test("readCsv and its schema start no Spark job") {
+    val path = csvFile("a,\"b\nc\",a\n1,2,3\n")
+    val (schema, jobs) = countingJobs(TableIo.readCsv(spark, path).schema)
+    assert(jobs == 0, s"readCsv started $jobs Spark jobs")
+    assert(schema.fieldNames.toSeq == Seq("a0", "b\nc", "a2", DedupOps.OrdinalCol))
   }
 }
