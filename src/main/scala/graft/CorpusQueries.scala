@@ -1559,6 +1559,26 @@ object CorpusQueries {
       .withColumn("dup_ppm", expr("(n_dup * 1000000) DIV n_spans"))
   }
 
+  /** x150's longest common prefix of `a` and `b`, as a long, exact up to
+    * `window` characters: prefix-match is monotone (a mismatch at char i
+    * rules out every longer prefix), so the first differing 1-char
+    * substring pins LCP = i - 1 and the ascending CASE chain
+    * short-circuits there; if no position in 1..window differs, the
+    * shorter string is a prefix of the longer and LCP = min(la, lb)
+    * (when one is a strict prefix of the other, substring past its end
+    * yields "", which differs from the longer side's char at position
+    * min + 1, so the chain stops there with min). Every arm is a
+    * codegen'd single-char compare — r17: replaces the interpreted
+    * sequence/filter HOF that allocated and compared 2·min(la,lb) PREFIX
+    * substrings per pair through per-element lambda dispatch (O(window²)
+    * chars and the last CPU hotspot of this query). */
+  def lcpExpr(a: Column, b: Column, window: Int): Column =
+    (1 to window).foldRight(least(length(a), length(b)).cast("long")) {
+      case (i, tail) =>
+        when(substring(a, i, 1) =!= substring(b, i, 1),
+             lit((i - 1).toLong)).otherwise(tail)
+    }
+
   /** X150 core — SHORT-duplicate recovery: the recall complement of
     * x67/x121 for shared regions in [tau, window) chars, which BOTH
     * miss — x67 needs offsets agreeing mod stride, x121 needs the full
@@ -1616,28 +1636,10 @@ object CorpusQueries {
     val hi = ord.select(col("rn").as("rn_b"), col("span").as("sp_b"),
                         col("doc_id").as("id_b"))
       .withColumn("blk", expr(s"rn_b div ${w - 1}"))
-    // longest common prefix, exact: prefix-match is monotone (a mismatch
-    // at char i rules out every longer prefix), so the first differing
-    // 1-char substring pins LCP = i - 1 and the ascending CASE chain
-    // short-circuits there; if no position in 1..window differs, the
-    // shorter span is a prefix of the longer and LCP = min(la, lb)
-    // (when one span is a strict prefix of the other, substring past its
-    // end yields "", which differs from the longer side's char at
-    // position min + 1, so the chain stops there with min). Every arm
-    // is a codegen'd single-char compare — r17: replaces the interpreted
-    // sequence/filter HOF that allocated and compared 2·min(la,lb)
-    // PREFIX substrings per pair through per-element lambda dispatch
-    // (O(window²) chars and the last CPU hotspot of this query).
-    val lcp = (1 to window).foldRight(
-        least(length(col("sp_a")), length(col("sp_b"))).cast("long")) {
-      case (i, tail) =>
-        when(substring(col("sp_a"), i, 1) =!= substring(col("sp_b"), i, 1),
-             lit((i - 1).toLong)).otherwise(tail)
-    }
     val pairs = lo.join(hi, Seq("blk"))
       .filter((col("rn_b") - col("rn_a")).between(1, w - 1) &&
               col("id_a") =!= col("id_b"))
-      .withColumn("pfx", lcp)
+      .withColumn("pfx", lcpExpr(col("sp_a"), col("sp_b"), window))
       .filter(col("pfx") >= tau)
     pairs.select(explode(array(
         struct(col("id_a").as("doc_id"), col("sp_a").as("span"), col("pfx")),

@@ -118,33 +118,22 @@ object Main {
 
     val written = ArrayBuffer.empty[String]
 
-    // each pipeline's build→materialize→write unit runs under a tracking
-    // CacheScope: the pipeline's persisted result, which both sinks read,
-    // and any operator-internal persist made while the pipeline builds
-    // are freed when its writes complete — the bounded-lifetime
-    // contract on the PRODUCTION path, not just in tests. Pinned executor
-    // memory across pipeline units is the long-lived-session failure mode
-    // this closes (the sinks inside the scope are the materialization).
+    // each pipeline result is collected once, and both sinks render from
+    // those rows: the plan runs once and nothing is persisted
     for (p <- pua; o <- tsOrg; d <- tsDept; ot <- overtime; te <- teM) {
-      graft.ops.CacheScope.using { implicit scope =>
-        val out = PuaPipeline.run(PuaPipeline.Inputs(p, o.df, d.df, ot.df, te.df))
-        written += TableIo.writeCsv(out, storage, outFolder,
-          DateOps.stampedName("PUA", ".csv", clock))
-        written += TableIo.writeXlsx(out, storage, outFolder,
-          DateOps.stampedName("PUA", ".xlsx", clock))
-      }
+      val out = PuaPipeline.run(PuaPipeline.Inputs(p, o.df, d.df, ot.df, te.df))
+      written ++= TableIo.writeCsvAndXlsx(out, storage, outFolder,
+        DateOps.stampedName("PUA", ".csv", clock),
+        DateOps.stampedName("PUA", ".xlsx", clock))
       Seq(o, d, ot, te).foreach(_.consumed = true)
     }
     for (bw <- certBw; mn <- certMn; o <- tsOrg; d <- tsDept;
          ot <- overtime; te <- teM) {
-      graft.ops.CacheScope.using { implicit scope =>
-        val out = CpaPipeline.run(
-          CpaPipeline.Inputs(bw.df, mn.df, o.df, d.df, ot.df, te.df), clock)
-        written += TableIo.writeCsv(out, storage, outFolder,
-          DateOps.stampedName("CPA", ".csv", clock))
-        written += TableIo.writeXlsx(out, storage, outFolder,
-          DateOps.stampedName("CPA", ".xlsx", clock))
-      }
+      val out = CpaPipeline.run(
+        CpaPipeline.Inputs(bw.df, mn.df, o.df, d.df, ot.df, te.df), clock)
+      written ++= TableIo.writeCsvAndXlsx(out, storage, outFolder,
+        DateOps.stampedName("CPA", ".csv", clock),
+        DateOps.stampedName("CPA", ".xlsx", clock))
       Seq(bw, mn, o, d, ot, te).foreach(_.consumed = true)
     }
 

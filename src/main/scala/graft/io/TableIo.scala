@@ -2,9 +2,12 @@ package graft.io
 
 import java.io.{BufferedReader, InputStreamReader}
 import java.nio.charset.StandardCharsets
+import java.time.{Instant, ZoneId, ZoneOffset}
+import java.time.format.DateTimeFormatter
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType, TimestampType}
 import graft.ops.DedupOps
@@ -288,6 +291,18 @@ object TableIo {
     else Xlsx.readTable(bytes, sheetName)
   }
 
+  /** S6 + S7 — both sinks of one pipeline result, from ONE collect: the
+    * frame is collected once in ingest order ([[collectInIngestOrder]])
+    * and the CSV and the XLSX are rendered on the driver from those rows,
+    * so its plan is analysed, optimized and run once, with no cache.
+    * Returns the CSV path, then the XLSX path. */
+  def writeCsvAndXlsx(df: DataFrame, storage: StorageClient, folder: String,
+                      csvName: String, xlsxName: String): Seq[String] = {
+    val rows = collectInIngestOrder(df)
+    Seq(storage.writeBytes(folder, csvName, renderCsv(rows)),
+        storage.writeBytes(folder, xlsxName, renderXlsx(rows)))
+  }
+
   /** S6 — CSV sink: ONE file, header, UTF-8, no index column, rows in
     * ingest order (ref 396-403, 606-613). Outputs are small by contract
     * (post-aggregation pipeline results), so the bytes are assembled
@@ -295,7 +310,7 @@ object TableIo {
     * collect-and-write path the survey documents; large results would use
     * df.write.csv. Rows are ordered by `_ingest_ord` on the driver after
     * the collect. Timestamps are rendered ISO `yyyy-MM-dd HH:mm:ss`
-    * (pandas default). */
+    * (pandas default). A run writing both sinks uses [[writeCsvAndXlsx]]. */
   def writeCsv(df: DataFrame, storage: StorageClient, folder: String,
                name: String): String =
     storage.writeBytes(folder, name, csvBytes(df))
@@ -306,22 +321,55 @@ object TableIo {
     * (`2024-07-01`), otherwise `yyyy-MM-dd HH:mm:ss[.ffffff]`; a null in a
     * datetime column (NaT) renders as a QUOTED empty field (`""`), while a
     * null in any other column renders as an unquoted empty field. */
-  def csvBytes(df: DataFrame): Array[Byte] = {
-    import java.time.ZoneOffset
-    import java.time.format.DateTimeFormatter
-    val (fields, rows) = collectInIngestOrder(df)
-    val isTs = fields.map(_.dataType == TimestampType)
-    def instantAt(r: Row, i: Int): java.time.Instant = r.get(i) match {
-      case t: java.sql.Timestamp => t.toInstant
-      case t: java.time.Instant  => t
-      case other => throw new IllegalStateException(s"not a timestamp: $other")
-    }
+  def csvBytes(df: DataFrame): Array[Byte] = renderCsv(collectInIngestOrder(df))
+
+  /** S7 — XLSX sink, mirror of S4 (ref 410-417, 620-627), rows in ingest
+    * order like S6. Every column renders to a string cell on the driver: a
+    * timestamp as `yyyy-MM-dd HH:mm:ss` in the session time zone (what
+    * `date_format` gives), any other value as the CSV sink renders it
+    * unquoted; a null is an empty cell. The sheet streams into its zip
+    * entry ([[Xlsx.write]]). */
+  def writeXlsx(df: DataFrame, storage: StorageClient, folder: String,
+                name: String): String =
+    storage.writeBytes(folder, name, renderXlsx(collectInIngestOrder(df)))
+
+  /** A collected sink frame: `rows` in ingest order, of which the columns
+    * at `keep` (every column but the ordinal) are written, described by
+    * `fields`. */
+  private final case class Collected(fields: Array[StructField], keep: Array[Int],
+                                     rows: Array[Row], zone: ZoneId)
+
+  /** Collect a small-by-contract sink frame (post-aggregation pipeline
+    * output) in ingest order. When `df` carries `_ingest_ord`, the rows
+    * are sorted by it HERE, on the driver, and the ordinal is not written:
+    * the sink collects every row anyway, so a global `orderBy` would only
+    * add a range-partition sample job and a sort exchange. The sort is
+    * stable and independent of the frame's partitioning. A frame without
+    * the ordinal keeps its collect order. */
+  private def collectInIngestOrder(df: DataFrame): Collected = {
+    val all = df.schema.fields
+    val ordIdx = all.indexWhere(_.name == DedupOps.OrdinalCol)
+    val keep = all.indices.filter(_ != ordIdx).toArray
+    val collected = df.collect()
+    val rows = if (ordIdx < 0) collected else collected.sortBy(_.getLong(ordIdx))
+    Collected(keep.map(all), keep, rows,
+      DateTimeUtils.getZoneId(df.sparkSession.sessionState.conf.sessionLocalTimeZone))
+  }
+
+  private def instantAt(r: Row, i: Int): Instant = r.get(i) match {
+    case t: java.sql.Timestamp => t.toInstant
+    case t: Instant => t
+    case other => throw new IllegalStateException(s"not a timestamp: $other")
+  }
+
+  private def renderCsv(c: Collected): Array[Byte] = {
+    val isTs = c.fields.map(_.dataType == TimestampType)
     // pandas renders a datetime column date-only iff every non-null value
     // is exactly midnight (DatetimeIndex "dates only" formatting)
-    val dateOnly = fields.indices.map { i =>
-      isTs(i) && rows.forall { r =>
-        r.isNullAt(i) || {
-          val t = instantAt(r, i)
+    val dateOnly = c.keep.indices.map { j =>
+      isTs(j) && c.rows.forall { r =>
+        r.isNullAt(c.keep(j)) || {
+          val t = instantAt(r, c.keep(j))
           t.getEpochSecond % 86400 == 0 && t.getNano == 0
         }
       }
@@ -329,59 +377,43 @@ object TableIo {
     val fmtDate = DateTimeFormatter.ofPattern("yyyy-MM-dd").withZone(ZoneOffset.UTC)
     val fmtSec = DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss").withZone(ZoneOffset.UTC)
     val fmtMicro = DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSSSSS").withZone(ZoneOffset.UTC)
-    def cell(r: Row, i: Int): String =
-      if (isTs(i)) {
-        if (r.isNullAt(i)) "\"\"" // NaT → quoted empty field
-        else {
-          val t = instantAt(r, i)
-          if (dateOnly(i)) fmtDate.format(t)
-          else if (t.getNano == 0) fmtSec.format(t)
-          else fmtMicro.format(t)
-        }
-      } else if (r.isNullAt(i)) ""
-      else csvQuote(r.get(i).toString)
-    val sb = new StringBuilder
-    sb.append(fields.map(f => csvQuote(f.name)).mkString(",")).append("\n")
-    rows.foreach { r =>
-      sb.append(fields.indices.map(cell(r, _)).mkString(",")).append("\n")
-    }
-    sb.toString.getBytes("UTF-8")
-  }
-
-  /** S7 — XLSX sink, mirror of S4 (ref 410-417, 620-627), rows in ingest
-    * order like S6. Every column renders to a string cell; timestamps ISO
-    * `yyyy-MM-dd HH:mm:ss`. */
-  def writeXlsx(df: DataFrame, storage: StorageClient, folder: String,
-                name: String): String = {
-    val rendered = df.select(df.schema.fields.map { f =>
-      f.dataType match {
-        case _ if f.name == DedupOps.OrdinalCol => col(f.name)
-        case TimestampType =>
-          date_format(col(f.name), "yyyy-MM-dd HH:mm:ss").as(f.name)
-        case _ => col(f.name).cast(StringType).as(f.name)
+    val sb = new java.lang.StringBuilder
+    def line(field: Int => Unit): Unit = {
+      c.keep.indices.foreach { j =>
+        if (j > 0) sb.append(',')
+        field(j)
       }
-    }.toIndexedSeq: _*)
-    val (fields, rows) = collectInIngestOrder(rendered)
-    val cells = rows.toSeq.map(r => fields.indices.map(i => Option(r.getString(i))))
-    storage.writeBytes(folder, name, Xlsx.write(fields.map(_.name).toSeq, cells))
+      sb.append('\n')
+    }
+    line(j => appendCsv(sb, c.fields(j).name))
+    c.rows.foreach { r =>
+      line { j =>
+        val i = c.keep(j)
+        if (isTs(j)) {
+          if (r.isNullAt(i)) sb.append("\"\"") // NaT → quoted empty field
+          else {
+            val t = instantAt(r, i)
+            val fmt = if (dateOnly(j)) fmtDate else if (t.getNano == 0) fmtSec else fmtMicro
+            fmt.formatTo(t, sb)
+          }
+        } else if (!r.isNullAt(i)) appendCsv(sb, r.get(i).toString)
+      }
+    }
+    sb.toString.getBytes(StandardCharsets.UTF_8)
   }
 
-  /** Collect a small-by-contract sink frame (post-aggregation pipeline
-    * output) in ingest order. When `df` carries `_ingest_ord`, the rows
-    * are sorted by it HERE, on the driver, and the ordinal is dropped:
-    * the sink collects every row anyway, so a global `orderBy` would only
-    * add a range-partition sample job and a sort exchange. The sort is
-    * stable and independent of the frame's partitioning. A frame without
-    * the ordinal keeps its collect order. */
-  private def collectInIngestOrder(df: DataFrame): (Array[StructField], Array[Row]) = {
-    val all = df.schema.fields
-    val ordIdx = all.indexWhere(_.name == DedupOps.OrdinalCol)
-    if (ordIdx < 0) (all, df.collect())
-    else {
-      val keep = all.indices.filter(_ != ordIdx)
-      val rows = df.collect().sortBy(_.getLong(ordIdx))
-      (keep.map(all).toArray, rows.map(r => Row.fromSeq(keep.map(r.get))))
+  private def renderXlsx(c: Collected): Array[Byte] = {
+    val fmtSec = DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss").withZone(c.zone)
+    val isTs = c.fields.map(_.dataType == TimestampType)
+    val cells = c.rows.view.map { r =>
+      c.keep.indices.map { j =>
+        val i = c.keep(j)
+        if (r.isNullAt(i)) None
+        else if (isTs(j)) Some(fmtSec.format(instantAt(r, i)))
+        else Some(r.get(i).toString)
+      }
     }
+    Xlsx.write(c.fields.map(_.name).toSeq, cells)
   }
 
   // pandas' C writer (lineterminator '\n', QUOTE_MINIMAL) quotes a field
@@ -389,8 +421,8 @@ object TableIo {
   // terminator — a bare '\r' ships UNQUOTED (verified against pandas 2.2.2,
   // pinned byte-for-byte in CsvRoundtripSpec). Do not "fix" this to quote
   // '\r': byte parity with the reference's to_csv output is the contract.
-  private def csvQuote(s: String): String =
+  private def appendCsv(sb: java.lang.StringBuilder, s: String): Unit =
     if (s.exists(c => c == ',' || c == '"' || c == '\n'))
-      "\"" + s.replace("\"", "\"\"") + "\""
-    else s
+      sb.append('"').append(s.replace("\"", "\"\"")).append('"')
+    else sb.append(s)
 }

@@ -1,6 +1,7 @@
 package graft.io
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
+import java.io.{BufferedWriter, ByteArrayInputStream, ByteArrayOutputStream, OutputStreamWriter, Writer}
+import java.nio.charset.StandardCharsets
 import java.util.zip.{ZipEntry, ZipInputStream, ZipOutputStream}
 import javax.xml.stream.{XMLInputFactory, XMLStreamConstants}
 import scala.collection.mutable
@@ -130,7 +131,7 @@ object Xlsx {
 
   /** Write a single-sheet workbook: header + rows, all inline strings;
     * None → empty cell omitted. */
-  def write(header: Seq[String], rows: Seq[Seq[Option[String]]]): Array[Byte] =
+  def write(header: Seq[String], rows: Iterable[Seq[Option[String]]]): Array[Byte] =
     write(header, rows, Set.empty)
 
   /** Write with DATE-STYLED cells: a cell in a `dateCols` column whose
@@ -139,8 +140,11 @@ object Xlsx {
     * numFmt 22 — what pandas `to_excel` produces for a datetime64
     * column. Non-ISO values (and dates inside the pre-1900-03-01
     * phantom window) stay plain string cells. Readback through [[read]]
-    * reproduces the original ISO strings. */
-  def write(header: Seq[String], rows: Seq[Seq[Option[String]]],
+    * reproduces the original ISO strings.
+    *
+    * The sheet XML streams through a buffered UTF-8 writer into its zip
+    * entry as `rows` is traversed once: no whole-sheet string is built. */
+  def write(header: Seq[String], rows: Iterable[Seq[Option[String]]],
             dateCols: Set[String]): Array[Byte] = {
     val dateIdx: Set[Int] =
       header.zipWithIndex.collect { case (h, i) if dateCols(h) => i }.toSet
@@ -191,31 +195,43 @@ object Xlsx {
           |<cellXfs count="2"><xf numFmtId="0"/><xf numFmtId="22" applyNumberFormat="1"/></cellXfs>
           |</styleSheet>""".stripMargin)
 
-    val sb = new StringBuilder
-    sb.append("""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""")
-    sb.append("""<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData>""")
+    z.putNextEntry(new ZipEntry("xl/worksheets/sheet1.xml"))
+    // closing the writer would close the zip: flush it, then close the entry
+    val w = new BufferedWriter(new OutputStreamWriter(z, StandardCharsets.UTF_8), 1 << 16)
+    w.write("""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""")
+    w.write("""<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData>""")
+    val refs = mutable.ArrayBuffer.empty[String] // column letters, once each
     def rowXml(r: Int, cells: Seq[Option[String]], isHeader: Boolean): Unit = {
-      sb.append(s"""<row r="${r + 1}">""")
-      cells.zipWithIndex.foreach {
-        case (Some(v), c) =>
+      val rowNum = Integer.toString(r + 1)
+      w.write("<row r=\""); w.write(rowNum); w.write("\">")
+      var c = 0
+      cells.foreach { cell =>
+        cell.foreach { v =>
+          while (refs.size <= c) refs += colRef(refs.size)
+          w.write("<c r=\""); w.write(refs(c)); w.write(rowNum)
           val serial =
-            if (!isHeader && dateIdx(c)) ExcelDates.isoToSerial(v) else None
+            if (!isHeader && withStyles && dateIdx(c)) ExcelDates.isoToSerial(v) else None
           serial match {
             case Some(d) =>
-              val num = if (d == math.rint(d)) d.toLong.toString else d.toString
-              sb.append(s"""<c r="${colRef(c)}${r + 1}" s="1"><v>$num</v></c>""")
+              w.write("\" s=\"1\"><v>")
+              w.write(if (d == math.rint(d)) d.toLong.toString else d.toString)
+              w.write("</v></c>")
             case None =>
-              sb.append(s"""<c r="${colRef(c)}${r + 1}" t="inlineStr"><is><t xml:space="preserve">${escape(v)}</t></is></c>""")
+              w.write("\" t=\"inlineStr\"><is><t xml:space=\"preserve\">")
+              writeEscaped(w, v)
+              w.write("</t></is></c>")
           }
-        case (None, _) => // omit empty cell
+        } // None: empty cell omitted
+        c += 1
       }
-      sb.append("</row>")
+      w.write("</row>")
     }
     rowXml(0, header.map(Some(_)), isHeader = true)
-    rows.zipWithIndex.foreach { case (cells, i) =>
-      rowXml(i + 1, cells, isHeader = false) }
-    sb.append("</sheetData></worksheet>")
-    put("xl/worksheets/sheet1.xml", sb.toString)
+    var r = 1
+    rows.foreach { cells => rowXml(r, cells, isHeader = false); r += 1 }
+    w.write("</sheetData></worksheet>")
+    w.flush()
+    z.closeEntry()
     z.close()
     bos.toByteArray
   }
@@ -432,6 +448,24 @@ object Xlsx {
     sb.toString
   }
 
-  private def escape(s: String): String =
-    s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
+  /** `s` with `&`, `<` and `>` escaped, written without building a copy. */
+  private def writeEscaped(w: Writer, s: String): Unit = {
+    var start = 0
+    var i = 0
+    while (i < s.length) {
+      val entity = s.charAt(i) match {
+        case '&' => "&amp;"
+        case '<' => "&lt;"
+        case '>' => "&gt;"
+        case _ => null
+      }
+      if (entity != null) {
+        w.write(s, start, i - start)
+        w.write(entity)
+        start = i + 1
+      }
+      i += 1
+    }
+    w.write(s, start, s.length - start)
+  }
 }

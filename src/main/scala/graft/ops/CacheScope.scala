@@ -11,9 +11,9 @@ import scala.collection.mutable
   * frame, [[graft.operators.DedupOperators]]' band/batch indexes and
   * dedupCorpus exact frame, [[graft.operators.SetSimJoin]]'s set/prefix
   * streams, [[graft.operators.ContainmentJoin]]'s postings,
-  * [[graft.operators.MarketBasket]]'s basket basis, [[PrefixSumOps]]'
-  * input/ranged frames, and the outputs of [[graft.pipeline.PuaPipeline]]
-  * and [[graft.pipeline.CpaPipeline]], which both sinks of a run read.
+  * [[graft.operators.MarketBasket]]'s basket basis and [[PrefixSumOps]]'
+  * input/ranged frames. (The payroll pipelines persist nothing: both sinks
+  * of a run render from one collect, [[graft.io.TableIo.writeCsvAndXlsx]].)
   * The operator cannot unpersist before returning — the cache must
   * outlive the caller's first materialization of the result — so each
   * such persist is registered with the implicit [[CacheScope]] in effect.

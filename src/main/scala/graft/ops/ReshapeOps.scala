@@ -9,12 +9,23 @@ object ReshapeOps {
 
   /** P3 — alias-tolerant rename: several source spellings map to one target;
     * applied only when the source exists and the target doesn't already
-    * (/root/reference/etl_payroll_pipeline.py:256-261, 376-380, 563-584). */
-  def renameIfExists(df: DataFrame, aliases: Seq[(String, String)]): DataFrame =
-    aliases.foldLeft(df) { case (d, (src, dst)) =>
-      if (d.columns.contains(src) && (src == dst || !d.columns.contains(dst)))
-        d.withColumnRenamed(src, dst)
-      else d
+    * (/root/reference/etl_payroll_pipeline.py:256-261, 376-380, 563-584).
+    * Aliases apply in order, so the first present spelling wins. Names
+    * compare exactly, as pandas compares them; the renames are applied by
+    * position, because Spark's own rename resolves names case-insensitively
+    * and would rename `ADj …` and `Adj …` alike. */
+  def renameIfExists(df: DataFrame, aliases: Seq[(String, String)]): DataFrame = {
+    val names = aliasedNames(df.columns.toSeq, aliases)
+    if (names == df.columns.toSeq) df else df.toDF(names: _*)
+  }
+
+  /** The column names [[renameIfExists]] gives `columns`, position for
+    * position. */
+  def aliasedNames(columns: Seq[String], aliases: Seq[(String, String)]): Seq[String] =
+    aliases.foldLeft(columns) { case (names, (src, dst)) =>
+      if (names.contains(src) && (src == dst || !names.contains(dst)))
+        names.map(n => if (n == src) dst else n)
+      else names
     }
 
   /** P4 — reshape-to-spec (ref 330-368 `col_map`): ordered output schema

@@ -4,6 +4,7 @@ import java.time.Clock
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
+import scala.collection.immutable.ListMap
 import graft.ops._
 
 /** CPA transformation pipeline — Spark-first re-expression of
@@ -47,9 +48,11 @@ object CpaPipeline {
     "TS-Org Title", "TS-Org Dept Code", "TS-Org Dept Title", "E-Class Code",
     "E-Class", "TE M", "Time Entry", "Overtime")
 
-  /** The result is persisted through the implicit [[CacheScope]], so both
-    * sinks read one materialization — see [[PuaPipeline.run]]. */
-  def run(in: Inputs, clock: Clock)(implicit scope: CacheScope): DataFrame = {
+  /** The result is lazy, like [[PuaPipeline.run]]'s: one collect runs it
+    * for both sinks. Each stage is one projection — derives with the D14
+    * strip and re-casts, the post-dedup split/rename/select — so the driver
+    * analyses a handful of plans, not one per column step. */
+  def run(in: Inputs, clock: Clock): DataFrame = {
     import ColumnOps._
     val ord = DedupOps.OrdinalCol
 
@@ -69,24 +72,33 @@ object CpaPipeline {
     // --- P7 schema validation, warn only (ref 457-471) ------------------
     ReshapeOps.validateSchema(df.drop(ord), ExpectedColumns)
 
-    // --- derives (ref 473-482): astype(str) → "nan" artifacts -----------
-    df = df
-      .withColumn("TS-Org Code",
-        dashConcat(castStrNanNull(col("JOB_TS_COAS")),
-                   castStrNanNull(col("JOB_TS_ORGN"))))
-      .withColumn("Dept TS-Org", prefix(col("TS-Org Code"), 5))
-    // D14 blanket strip of all string columns, null → "nan" (ref 476-478)
-    df = blanketStripExcept(df, Set(ord, "TRAN_CREATE_DT"))
-    df = df
-      .withColumn("JOB_ECLS", castStrNanNull(col("JOB_ECLS")))
-      .withColumn("PAY_ID", castStrNanNull(col("PAY_ID")))
-      .withColumn("UIN Job",
-        dashConcat(castStrNanNull(col("UIN")), castStrNanNull(col("JOB"))))
+    // --- derives (ref 473-482), the D14 blanket strip of every string
+    // column, null → "nan" (ref 476-478), and the re-casts that read the
+    // stripped values, in one projection. Column order is withColumn's: a
+    // derived column replaces a present one in place or is appended. ----
+    val tsOrgCode = dashConcat(castStrNanNull(col("JOB_TS_COAS")),
+                               castStrNanNull(col("JOB_TS_ORGN")))
+    val derived = Map("TS-Org Code" -> tsOrgCode, "Dept TS-Org" -> prefix(tsOrgCode, 5))
+    val strings = df.schema.fields.collect {
+      case f if f.dataType == StringType => f.name // not the ordinal or the date
+    }.toSet ++ derived.keys
+    def strip(n: String): Column = {
+      val v = derived.getOrElse(n, col(n))
+      if (strings(n)) castStrNanNull(v) else v
+    }
+    val recast = Map(
+      "JOB_ECLS" -> castStrNanNull(strip("JOB_ECLS")),
+      "PAY_ID" -> castStrNanNull(strip("PAY_ID")),
+      "UIN Job" -> dashConcat(castStrNanNull(strip("UIN")),
+                              castStrNanNull(strip("JOB"))))
+    val names = appended(df.columns.toSeq,
+      Seq("TS-Org Code", "Dept TS-Org", "JOB_ECLS", "PAY_ID", "UIN Job"))
+    df = df.select(names.map(n => recast.getOrElse(n, strip(n)).as(n)): _*)
 
     // lookup normalization (ref 484-485), applied purely where consumed
-    val overtimeNorm = in.overtime
-      .withColumn("Job Eclass", castStrNanNull(col("Job Eclass")))
-      .withColumn("Pay ID", castStrNanNull(col("Pay ID")))
+    val overtimeNorm = in.overtime.withColumns(ListMap(
+      "Job Eclass" -> castStrNanNull(col("Job Eclass")),
+      "Pay ID" -> castStrNanNull(col("Pay ID"))))
 
     // --- J1 org join → TS-Org Name (ref 487-492) ------------------------
     val org = JoinOps.prepareLookup(in.tsOrg, Seq("TS-Org Code", "TS-Org Title"))
@@ -111,8 +123,7 @@ object CpaPipeline {
       .select(castStrNanNull(col("TE M")).as("TE M"),
               castStrNanNull(col("Time Entry Method")).as("Time Entry Method"))
     val teMap = AggOps.modeDeterministic(temp, "TE M", "Time Entry Method")
-      .withColumnRenamed("TE M", "_te_key")
-      .withColumnRenamed("Time Entry Method", "_te_mapped")
+      .toDF("_te_key", "_te_mapped")
     df = df.withColumn("TE M", castStrNanNull(col("TE M")))
     val existing = // 'Time Entry' column does not exist pre-join (ref 524-527)
       if (df.columns.contains("Time Entry")) ensureString(col("Time Entry"))
@@ -135,16 +146,15 @@ object CpaPipeline {
     df = DedupOps.distinctKeepMinOrdinal(df)
     df = DedupOps.dedupKeepFirst(df, Seq("UIN Job"))
 
-    // --- D7 College split (ref 550-560) ---------------------------------
+    // --- D7 College split (ref 550-560), P3 rename (ref 563-584), P1
+    // select (ref 586-589) ------------------------------------------------
     val parts = split(col("COLLEGE"), "-", 2)
-    df = df
-      .withColumn("College Code", trim(element_at(parts, 1)))
-      .withColumn("College Name",
-        when(size(parts) < 2, lit(null).cast(StringType))
-          .otherwise(trim(element_at(parts, 2))))
-
-    // --- P3 rename + P1 select + P5 (ref 563-591) -----------------------
-    df = ReshapeOps.renameIfExists(df, Seq(
+    val split2 = Map(
+      "College Code" -> trim(element_at(parts, 1)),
+      "College Name" -> when(size(parts) < 2, lit(null).cast(StringType))
+        .otherwise(trim(element_at(parts, 2))))
+    val sources = appended(df.columns.toSeq, split2.keys.toSeq)
+    val renamed = ReshapeOps.aliasedNames(sources, Seq(
       "PAY_ID" -> "Pay ID", "PAY_YEAR" -> "Year", "PAY_NBR" -> "Pay #",
       "PAY_SEQ" -> "Seq #", "JOB" -> "Job Number", "COLLEGE" -> "College",
       "JOB_TS_COAS" -> "TS COA", "JOB_TS_ORGN" -> "TS Org",
@@ -152,15 +162,15 @@ object CpaPipeline {
       "TS-Org Department Name" -> "TS-Org Dept Title",
       "JOB_ECLS" -> "E-Class Code", "E-Class Description" -> "E-Class",
       "Overtime FLSA" -> "Overtime"))
-    scope.persist(df.select((FinalColumns.map(col) :+ col(ord)): _*))
+    val sourceOf = renamed.zip(sources).toMap
+    df.select((FinalColumns.map { n =>
+      val src = sourceOf.getOrElse(n, n)
+      split2.getOrElse(src, col(src)).as(n)
+    } :+ col(ord)): _*)
   }
 
-  /** D14 with exclusions for engine bookkeeping columns. */
-  private def blanketStripExcept(df: DataFrame, skip: Set[String]): DataFrame = {
-    val cols = df.schema.fields.map { f =>
-      if (skip.contains(f.name) || f.dataType != StringType) col(f.name)
-      else ColumnOps.castStrNanNull(col(f.name)).as(f.name)
-    }
-    df.select(cols.toIndexedSeq: _*)
-  }
+  /** `names` followed by each of `added` not already among them: the
+    * column order a chain of `withColumn` calls produces. */
+  private def appended(names: Seq[String], added: Seq[String]): Seq[String] =
+    names ++ added.filterNot(names.contains)
 }

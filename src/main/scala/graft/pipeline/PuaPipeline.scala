@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
+import scala.collection.immutable.ListMap
 import graft.ops._
 
 /** PUA transformation pipeline — Spark-first re-expression of
@@ -60,43 +61,42 @@ object PuaPipeline {
     "ADJ Reason Code", "ADJ Reason DESC", "Calc Date", "Pay Event",
     "POSN", "SUFF")
 
-  /** The result is persisted through the implicit [[CacheScope]]: the
-    * first sink that collects it fills the cache and the second only
-    * scans it, so the plan runs once per CSV+XLSX write pair (the
-    * reference writes both from one in-memory frame). Main wraps each
-    * build-materialize-write unit in `CacheScope.using`, which frees the
-    * cache once the writes finish; under the default session scope it
-    * lives until `clearCache()`. */
-  def run(in: Inputs)(implicit scope: CacheScope): DataFrame = {
+  /** The result is lazy: the caller's single collect runs the plan once
+    * and both sinks render from those rows ([[graft.io.TableIo.writeCsvAndXlsx]]).
+    * The plan is built in one projection per dependency level — derived
+    * fields, their concatenations, the post-join projection, the post-dedup
+    * reshape — so the driver analyses a handful of plans, not one per
+    * column step. A derived column that another one reads stays in its own,
+    * earlier projection: CollapseProject does not merge a non-trivial
+    * expression referenced twice, so inlining it would only repeat it. */
+  def run(in: Inputs): DataFrame = {
     import ColumnOps._
     val ord = DedupOps.OrdinalCol
-
-    // --- derived fields (ref 238-254) -----------------------------------
-    var df = in.pua
     def es(c: String): Column = ensureString(col(c)) // astype("string").strip
+    // strip_decimal_str = astype(str) → null becomes "nan" (H2)
+    def sds(c: String): Column = stripDecimalStr(castStrNanNull(col(c)))
 
-    df = df
-      .withColumn("TS COA", es("TS COA"))
-      .withColumn("TS ORG", es("TS ORG"))
-      .withColumn("TS-Org Code", dashConcat(col("TS COA"), col("TS ORG")))
-      // strip_decimal_str = astype(str) → null becomes "nan" (H2)
-      .withColumn("DEPT Code", stripDecimalStr(castStrNanNull(col("DEPT Code"))))
-      .withColumn("TS-Org Department Code",
-                  dashConcat(col("TS COA"), col("DEPT Code")))
-      .withColumn("Department Name", es("Department Name"))
-      .withColumn("E-Class", castStrNanNull(col("ECLS DESC")))
-      .withColumn("Year", es("Year"))
-      .withColumn("Pay ID", es("Pay ID"))
-      .withColumn("Pay #", es("Pay #"))
-      .withColumn("Seq #", es("Seq #"))
-      .withColumn("Pay Event",
-                  concatAll(col("Year"), col("Pay ID"), col("Pay #"), col("Seq #")))
-      .withColumn("POSN", stripDecimalStr(castStrNanNull(col("POSN"))))
-      .withColumn("SUFF", stripDecimalStr(castStrNanNull(col("SUFF"))))
-      .withColumn("Job Number", dashConcat(col("POSN"), col("SUFF")))
-      .withColumn("College Code", es("College Code"))
-      .withColumn("College Name", es("College Name"))
-      .withColumn("College", dashConcat(col("College Code"), col("College Name")))
+    // --- derived fields (ref 238-254): the trims and casts, with TE M's
+    // astype(str), then the concats that read them ----------------------
+    var df = in.pua
+      .withColumns(ListMap(
+        "TS COA" -> es("TS COA"), "TS ORG" -> es("TS ORG"),
+        "DEPT Code" -> sds("DEPT Code"),
+        "Department Name" -> es("Department Name"),
+        "E-Class" -> castStrNanNull(col("ECLS DESC")),
+        "Year" -> es("Year"), "Pay ID" -> es("Pay ID"),
+        "Pay #" -> es("Pay #"), "Seq #" -> es("Seq #"),
+        "POSN" -> sds("POSN"), "SUFF" -> sds("SUFF"),
+        "College Code" -> es("College Code"),
+        "College Name" -> es("College Name"),
+        "TE M" -> castStrNanNull(col("TE M"))))
+      .withColumns(ListMap(
+        "TS-Org Code" -> dashConcat(col("TS COA"), col("TS ORG")),
+        "TS-Org Department Code" -> dashConcat(col("TS COA"), col("DEPT Code")),
+        "Pay Event" ->
+          concatAll(col("Year"), col("Pay ID"), col("Pay #"), col("Seq #")),
+        "Job Number" -> dashConcat(col("POSN"), col("SUFF")),
+        "College" -> dashConcat(col("College Code"), col("College Name"))))
 
     // --- alias-tolerant ADJ rename (ref 256-261) ------------------------
     df = ReshapeOps.renameIfExists(df, AdjAliases)
@@ -110,77 +110,65 @@ object PuaPipeline {
       Seq("TS-Org Dept Code", "TS-Org Dept Title"))
     df = JoinOps.leftJoinExpr(df, dept,
       df("TS-Org Department Code") === dept("TS-Org Dept Code"))
-    // D9 — dept-title fallback (ref 273-274)
-    df = df.withColumn("TS-Org Dept Title",
-      fillFrom(col("TS-Org Dept Title"), col("Department Name")))
 
-    // --- J3 overtime lookup, right key dropped (ref 276-279) ------------
+    // --- J3 overtime lookup (ref 276-279) -------------------------------
     val ot = JoinOps.prepareLookup(in.overtime, Seq("Job Eclass", "Overtime FLSA"))
     df = JoinOps.leftJoinExpr(df, ot, df("ECLS") === ot("Job Eclass"))
-      .withColumnRenamed("Overtime FLSA", "Overtime")
-      .drop("Job Eclass")
 
-    // --- G1 + D10 Time Entry fill (ref 282-299) -------------------------
-    // te_map = mode of Time Entry Method per trimmed TE M (ties → smallest)
+    // --- G1 te_map (ref 282-299): mode of Time Entry Method per trimmed
+    // TE M (ties → smallest) ----------------------------------------------
     val te = in.teM
       .filter(col("TE M").isNotNull && col("Time Entry Method").isNotNull)
       .select(castStrNanNull(col("TE M")).as("TE M"),
               castStrNanNull(col("Time Entry Method")).as("Time Entry Method"))
     val teMap = AggOps.modeDeterministic(te, "TE M", "Time Entry Method")
-      .withColumnRenamed("TE M", "_te_key")
-      .withColumnRenamed("Time Entry Method", "_te_mapped")
+      .toDF("_te_key", "_te_mapped")
+    df = JoinOps.leftJoinExpr(df, broadcast(teMap), df("TE M") === teMap("_te_key"))
 
-    df = df.withColumn("TE M", castStrNanNull(col("TE M"))) // astype(str)
-    if (!df.columns.contains("Time Entry"))
-      df = df.withColumn("Time Entry", lit(null).cast(StringType))
-    df = JoinOps.leftJoinExpr(df, broadcast(teMap),
-        df("TE M") === teMap("_te_key"))
-      .withColumn("Time Entry", keepOrFill(col("Time Entry"), col("_te_mapped")))
-      .drop("_te_key", "_te_mapped")
-
-    // --- P1 projection (ref 301-312) ------------------------------------
-    val keep = SourceFields.filter(df.columns.contains) :+ ord
-    df = df.select(keep.map(col): _*)
+    // --- D9 dept-title fallback (ref 273-274), J3 rename with the right
+    // key dropped (ref 276-279), D10 Time Entry fill (ref 293-299), P1
+    // projection (ref 301-312) ---------------------------------------------
+    val have = df.columns.toSet
+    val timeEntry = // the extract may have no 'Time Entry' column
+      if (have("Time Entry")) col("Time Entry") else lit(null).cast(StringType)
+    val filled = Map(
+      "TS-Org Dept Title" ->
+        fillFrom(col("TS-Org Dept Title"), col("Department Name")),
+      "Overtime" -> col("Overtime FLSA"),
+      "Time Entry" -> keepOrFill(timeEntry, col("_te_mapped")))
+    df = df.select(SourceFields.collect {
+      case c if filled.contains(c) => filled(c).as(c)
+      case c if have(c) => col(c)
+    } :+ col(ord): _*)
 
     // --- U2 keep-first dedup (ref 314-317) ------------------------------
     df = DedupOps.dedupKeepFirst(df, Seq("UIN", "Pay Event", "Job Number"))
 
-    // --- D15 retype + D11 ADJ default (ref 319-328) ---------------------
-    df = retypeAllStringsExcept(df, "Calc Date", ord)
-    if (df.columns.contains("ADJ Reason Code")) {
-      // materialize the mask BEFORE overwriting the code column — the DESC
-      // update uses the same mask over the ORIGINAL value (ref 325-328)
-      df = df.withColumn("_adj_missing", isMissingMarker(col("ADJ Reason Code")))
-        .withColumn("ADJ Reason Code",
-          when(col("_adj_missing"), lit("INT")).otherwise(col("ADJ Reason Code")))
-      if (df.columns.contains("ADJ Reason DESC"))
-        df = df.withColumn("ADJ Reason DESC",
-          when(col("_adj_missing"), lit("Internal")).otherwise(col("ADJ Reason DESC")))
-      df = df.drop("_adj_missing")
-    }
-
-    // --- P4 reshape (ref 330-368) + D15 + P3 final rename (370-380) -----
+    // --- D15 retype (ref 319-322), D11 ADJ default (ref 324-328), P4
+    // reshape (ref 330-368), D15 again and the P3 renames (ref 370-380) --
     // (reshapeToSpec semantics, inlined so the ingest ordinal rides along)
-    var out = df.select((ColMap.map { case (o, s) =>
-      (if (df.columns.contains(s)) col(s) else lit(null).cast(StringType)).as(o)
-    } :+ col(ord)): _*)
-    out = retypeAllStringsExcept(out, "Calc Date", ord)
-    out = out
-      .withColumnRenamed("TS Org", "TS ORG")
-      .withColumnRenamed("Adjustment Reason", "Adjustment Reason Description")
-    scope.persist(out)
-  }
-
-  /** ref 319-322 / 370-374: every column except Calc Date →
-    * astype("string").str.strip() (nulls kept); Calc Date → to_datetime
-    * with coerce. */
-  private def retypeAllStringsExcept(df: DataFrame, tsCol: String,
-                                     ordCol: String): DataFrame = {
-    val cols = df.schema.fields.map { f =>
-      if (f.name == ordCol) col(f.name)
-      else if (f.name == tsCol) ColumnOps.toTimestampCoerce(col(f.name)).as(f.name)
-      else ColumnOps.ensureString(col(f.name)).as(f.name)
+    val kept = df.columns.toSet
+    def retype(name: String, c: Column): Column =
+      if (name == "Calc Date") toTimestampCoerce(c) else ensureString(c)
+    // the mask reads the retyped code BEFORE the default overwrites it;
+    // the DESC update uses the same mask over that original value
+    val adjMissing =
+      if (kept("ADJ Reason Code"))
+        Some(isMissingMarker(retype("ADJ Reason Code", col("ADJ Reason Code"))))
+      else None
+    val adjDefault = Map("ADJ Reason Code" -> "INT", "ADJ Reason DESC" -> "Internal")
+    def source(s: String): Column = {
+      val retyped = retype(s, col(s))
+      (adjMissing, adjDefault.get(s)) match {
+        case (Some(m), Some(d)) => when(m, lit(d)).otherwise(retyped)
+        case _ => retyped
+      }
     }
-    df.select(cols.toIndexedSeq: _*)
+    val finalName = Map("TS Org" -> "TS ORG",
+      "Adjustment Reason" -> "Adjustment Reason Description")
+    df.select(ColMap.map { case (o, s) =>
+      retype(o, if (kept(s)) source(s) else lit(null).cast(StringType))
+        .as(finalName.getOrElse(o, o))
+    } :+ col(ord): _*)
   }
 }

@@ -1077,17 +1077,12 @@ class CorpusQueriesSpec extends SparkSpec {
   }
 
   test("x150 pfx CASE-chain LCP equals the HOF count form on adversarial pairs") {
-    // the r17 codegen'd short-circuiting LCP must agree with the
+    // the r17 codegen'd short-circuiting LCP — the production
+    // expression, at shortDupSpans' default window — must agree with the
     // sequence/filter HOF it replaced — including the prefix-of case
     // (no mismatch inside the window), first-char mismatch, equal
     // strings, multi-byte codepoints, and lengths straddling the window
-    val window = 24
-    val lcp = (1 to window).foldRight(
-        least(length(col("sp_a")), length(col("sp_b"))).cast("long")) {
-      case (i, tail) =>
-        when(substring(col("sp_a"), i, 1) =!= substring(col("sp_b"), i, 1),
-             lit((i - 1).toLong)).otherwise(tail)
-    }
+    val lcp = CorpusQueries.lcpExpr(col("sp_a"), col("sp_b"), window = 24)
     val hof = size(filter(
       sequence(lit(1), least(length(col("sp_a")), length(col("sp_b")))),
       i => col("sp_a").substr(lit(1), i) === col("sp_b").substr(lit(1), i)))

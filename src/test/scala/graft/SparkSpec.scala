@@ -18,9 +18,11 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   /** `body`'s result and the number of Spark jobs it started. The
-    * listener bus is async: a tagged one-task barrier job runs after
-    * `body`, and its start event is delivered after every job event queued
-    * before it, so the count is complete once the barrier is seen. */
+    * listener bus is async, so a tagged one-task barrier job runs before
+    * and after `body`, and only job starts delivered between the two
+    * barriers' starts are counted: the bus delivers events in order, so a
+    * late start event of a job that ran before `body` is not counted, and
+    * the count is complete once the second barrier is seen. */
   def countingJobs[T](body: => T): (T, Int) = {
     val sc = spark.sparkContext
     val barrier = "graft.test.barrier"
@@ -30,17 +32,21 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       override def onJobStart(js: SparkListenerJobStart): Unit =
         if (Option(js.properties).exists(_.getProperty(barrier) != null))
           barriers.incrementAndGet(): Unit
-        else jobs.incrementAndGet(): Unit
+        else if (barriers.get() == 1) jobs.incrementAndGet(): Unit
     }
-    sc.addSparkListener(l)
-    try {
-      val result = body
+    def barrierJob(): Unit = {
       sc.setLocalProperty(barrier, "1")
       try sc.parallelize(Seq(1), 1).count()
       finally sc.setLocalProperty(barrier, null)
+    }
+    sc.addSparkListener(l)
+    try {
+      barrierJob()
+      val result = body
+      barrierJob()
       val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (barriers.get() == 0 && System.nanoTime() < deadline) Thread.sleep(5)
-      assert(barriers.get() == 1, "listener bus did not drain in 30 s")
+      while (barriers.get() < 2 && System.nanoTime() < deadline) Thread.sleep(5)
+      assert(barriers.get() == 2, "listener bus did not drain in 30 s")
       (result, jobs.get())
     } finally sc.removeSparkListener(l)
   }

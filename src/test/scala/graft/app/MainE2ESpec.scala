@@ -115,11 +115,11 @@ class MainE2ESpec extends SparkSpec with TimeLimits {
     // the load summary, byte for byte (ref 179-194)
     assert(loads == NoCpaXlsx + LookupLoadLines + CertLoadLines)
 
-    // Main wraps each pipeline unit in CacheScope.using: every
-    // operator-internal persist must be freed by the time run returns —
-    // a long-lived session must not accumulate pinned executor memory
+    // Main.run persists nothing: each pipeline result is collected once
+    // for both sinks — a long-lived session must not accumulate pinned
+    // executor memory
     assert(spark.sharedState.cacheManager.isEmpty,
-      "pipeline-internal caches survived Main.run")
+      "Main.run left a cached frame behind")
 
     assert(written.size == 4, s"expected 4 outputs, got $written")
     // stamped names from the pinned clock: MMddyyyy_HHmm of 2025-03-15T12:00Z
@@ -151,7 +151,7 @@ class MainE2ESpec extends SparkSpec with TimeLimits {
     assert(h.length == 26 && rows.size == 6)
   }
 
-  test("both sinks of a pipeline read one materialization; XLSX cells equal CSV fields") {
+  test("both sinks of a pipeline share one collect; XLSX cells equal CSV fields") {
     val (inDir, lkDir, outDir) = writeFixtures()
     val storage = new LocalFsStorage
     spark.catalog.clearCache()
@@ -161,12 +161,13 @@ class MainE2ESpec extends SparkSpec with TimeLimits {
     // Measured on these fixtures: 79 jobs when each sink re-ran its
     // pipeline behind a global orderBy; 50 with one cached result per
     // pipeline ordered on the driver; 31 with the CSV headers named on the
-    // driver and the load summary taken from observations (the sinks' jobs
-    // plus Feeder_List's count). A second full execution of either
+    // driver and the load summary taken from observations; 27 with one
+    // collect per pipeline feeding both sinks and no cache (the pipelines'
+    // own jobs plus Feeder_List's count). A second execution of either
     // pipeline, or a load-summary count of a frame a pipeline scanned,
     // adds more jobs than this budget leaves room for.
-    assert(jobs <= 31,
-      s"Main.run took $jobs Spark jobs — a sink recomputes its pipeline, " +
+    assert(jobs <= 27,
+      s"Main.run took $jobs Spark jobs — a pipeline runs more than once, " +
         "or the load summary scans an input a pipeline already read")
 
     // the XLSX sink writes the CSV sink's rows, in the same order; Calc

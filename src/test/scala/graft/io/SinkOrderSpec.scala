@@ -60,4 +60,27 @@ class SinkOrderSpec extends SparkSpec {
     assert(csv.split("\n").toSeq.tail.map(_.takeWhile(_ != ',')) == ids)
     assert(xlsxCells(df)._2.map(_.head.get) == ids)
   }
+
+  test("XLSX timestamp cells read as Spark's date_format renders them; a null is an empty cell") {
+    val df = Seq("2024-07-01 00:00:00", "2024-07-01 08:30:15.123456",
+                 "1965-03-09 23:59:59.5", null)
+      .toDF("s").select(col("s").cast("timestamp").as("ts"))
+    val expected = df.select(date_format(col("ts"), "yyyy-MM-dd HH:mm:ss"))
+      .as[String].collect().toSeq.map(Option(_))
+    assert(expected.last.isEmpty && expected.count(_.isDefined) == 3)
+    assert(xlsxCells(df)._2.map(_.head) == expected)
+  }
+
+  test("writeCsvAndXlsx writes both sinks from one collect") {
+    val storage = new LocalFsStorage
+    val dir = Files.createTempDirectory("graft_sink_both").toString
+    // a fresh shuffled frame per call, so no call reuses another's shuffle
+    val (paths, jobs) = countingJobs(
+      TableIo.writeCsvAndXlsx(frame.repartition(7), storage, dir, "t.csv", "t.xlsx"))
+    assert(paths.map(p => p.substring(p.lastIndexOf('/') + 1)) == Seq("t.csv", "t.xlsx"))
+    assert(storage.readBytes(paths.head).sameElements(TableIo.csvBytes(frame.repartition(7))))
+    assert(Xlsx.readTable(storage.readBytes(paths(1))) == xlsxCells(frame.repartition(7)))
+    // as many Spark jobs as one sink alone
+    assert(jobs == countingJobs(TableIo.csvBytes(frame.repartition(7)))._2)
+  }
 }

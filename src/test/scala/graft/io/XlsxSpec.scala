@@ -187,6 +187,19 @@ class XlsxSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(back == rows)
   }
 
+  test("a sheet larger than the writer's buffer reads back cell for cell") {
+    // ~3k rows of multi-byte UTF-8 (2-, 3- and 4-byte, the last a surrogate
+    // pair) and XML specials: the sheet spans many buffer flushes
+    val header = Seq("id", "text", "sparse")
+    val rows = (0 until 3000).map { i =>
+      Seq(Some(s"r$i"), Some(s"é漢\uD83D\uDE00 & <$i> ${"x" * (i % 7)}"),
+          if (i % 3 == 0) None else Some(s"a>b&c<$i"))
+    }
+    val (h, back) = Xlsx.readTable(Xlsx.write(header, rows))
+    assert(h == header)
+    assert(back == rows)
+  }
+
   test("default read fails loud when the declared first sheet's part is " +
        "missing — never silently reads a different sheet") {
     // twoSheetWb minus sheet1.xml: rels resolves rId1 → worksheets/

@@ -136,4 +136,22 @@ class DedupAggJoinSpec extends SparkSpec {
     assert(out.columns.count(_ == "k") == 1)
     assert(out.select("k").head.getString(0) == "x")
   }
+
+  test("P3 renameIfExists: the first present alias wins, a taken target or absent source is skipped") {
+    import spark.implicits._
+    // both PUA spellings of the ADJ code: they differ only in case, which
+    // Spark's own rename would not tell apart
+    val both = Seq(("a", "b", "c")).toDF("ADj Reason Code", "Adj Reason Code", "Adj Reason")
+    val renamed = ReshapeOps.renameIfExists(both, graft.pipeline.PuaPipeline.AdjAliases)
+    assert(renamed.columns.toSeq ==
+      Seq("ADJ Reason Code", "Adj Reason Code", "ADJ Reason DESC"))
+    assert(renamed.head.toSeq == Seq("a", "b", "c"))
+
+    // a rename onto an existing name is skipped; an absent source is ignored
+    val taken = Seq(("x", "y")).toDF("Adj Reason", "ADJ Reason DESC")
+    val kept = ReshapeOps.renameIfExists(taken,
+      Seq("Adj Reason" -> "ADJ Reason DESC", "Ghost" -> "Spirit"))
+    assert(kept.columns.toSeq == Seq("Adj Reason", "ADJ Reason DESC"))
+    assert(kept.head.toSeq == Seq("x", "y"))
+  }
 }
