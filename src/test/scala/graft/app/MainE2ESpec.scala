@@ -151,7 +151,7 @@ class MainE2ESpec extends SparkSpec with TimeLimits {
     assert(h.length == 26 && rows.size == 6)
   }
 
-  test("both sinks of a pipeline share one collect; XLSX cells equal CSV fields") {
+  test("both sinks of a pipeline read one materialization; XLSX cells equal CSV fields") {
     val (inDir, lkDir, outDir) = writeFixtures()
     val storage = new LocalFsStorage
     spark.catalog.clearCache()
