@@ -163,7 +163,7 @@ object Bench {
         s"(probe base ${f"$probeBase%.2f"}s): " +
         noisyIdx.map(results(_)._1).mkString(", "))
     // Self-adjudication (the r12 lesson: noisy entries used to need a
-    // MANUAL TimeOne session after every capture): each flagged entry is
+    // MANUAL solo re-run after every capture): each flagged entry is
     // re-measured at capture END — temporally displaced from whatever
     // spike flagged it, with its own interleaved probe so residual load
     // is still visible. solo_med lands in the JSON line positionally

@@ -250,13 +250,6 @@ object TableIo {
   def readOrc(spark: SparkSession, path: String): DataFrame =
     spark.read.orc(path)
 
-  /** ORC sink, sharded by partition like [[writeJsonl]]. */
-  def writeOrc(df: DataFrame, path: String,
-               shards: Option[Int] = None): Unit = {
-    val out = shards.fold(df)(n => df.repartition(n))
-    out.write.mode("overwrite").orc(path)
-  }
-
   /** S4 — Excel source via the hand-rolled codecs: header row 0, all
     * values string (date-styled cells resolve to ISO strings through
     * the style table — [[ExcelDates]]). `sheetName = None` reads the

@@ -67,7 +67,7 @@ object SetSimJoin {
   def join(docs: DataFrame, idCol: String, setCol: String,
            tauNum: Int, tauDen: Int)
           (implicit scope: graft.ops.CacheScope): DataFrame =
-    joinImpl(docs, idCol, setCol, tauNum, tauDen)._2
+    joinImpl(docs, idCol, setCol, tauNum, tauDen)
 
   /** Document-frequency-CAPPED set-similarity join — candidate
     * GOVERNANCE for token spaces that saturate (the r11 sf1 probe
@@ -89,21 +89,13 @@ object SetSimJoin {
                  tauNum: Int, tauDen: Int, dfCap: Long)
                 (implicit scope: graft.ops.CacheScope): DataFrame = {
     require(dfCap >= 1, s"joinCapped: dfCap must be >= 1, got $dfCap")
-    joinImpl(docs, idCol, setCol, tauNum, tauDen, Some(dfCap))._2
+    joinImpl(docs, idCol, setCol, tauNum, tauDen, Some(dfCap))
   }
-
-  /** Dev/probe hook: run only candidate generation, return its count. */
-  private[graft] def joinCandidatesForProbe(
-      docs: DataFrame, idCol: String, setCol: String,
-      tauNum: Int, tauDen: Int)
-     (implicit scope: graft.ops.CacheScope): Long =
-    joinImpl(docs, idCol, setCol, tauNum, tauDen)._1.count()
 
   private def joinImpl(docs: DataFrame, idCol: String, setCol: String,
                        tauNum: Int, tauDen: Int,
                        dfCap: Option[Long] = None)
-                      (implicit scope: graft.ops.CacheScope)
-      : (DataFrame, DataFrame) = {
+                      (implicit scope: graft.ops.CacheScope): DataFrame = {
     require(tauNum > 0 && tauDen > 0 && tauNum <= tauDen,
       s"setSimJoin: tau must be in (0,1], got $tauNum/$tauDen")
     // both the element stream (df count + ranked rebuild) and the verify
@@ -221,7 +213,7 @@ object SetSimJoin {
                          size(col("_set")).cast("long").as("_la"))
     val sb = sets.select(col("_id").as("id_b"), col("_set").as("_sb"),
                          size(col("_set")).cast("long").as("_lb"))
-    val out = cand.join(sa.hint("shuffle_hash"), Seq("id_a"))
+    cand.join(sa.hint("shuffle_hash"), Seq("id_a"))
       .join(sb.hint("shuffle_hash"), Seq("id_b"))
       .withColumn("inter",
         size(array_intersect(col("_sa"), col("_sb"))).cast("long"))
@@ -229,7 +221,6 @@ object SetSimJoin {
       .filter(col("inter") * tauDen >= col("uni") * tauNum)
       .select(col("id_a"), col("id_b"), col("inter"), col("uni"),
               round(col("inter").cast("double") / col("uni"), 4).as("jac"))
-    (cand, out)
   }
 
   /** Exact binary-COSINE threshold join: all pairs with

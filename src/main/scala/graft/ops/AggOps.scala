@@ -29,8 +29,4 @@ object AggOps {
       .filter(col("_rn") === 1)
       .select(col(key), col(value))
   }
-
-  /** G2 — min/max over a column, single row (ref 440-441). */
-  def minMax(df: DataFrame, c: String): DataFrame =
-    df.agg(min(col(c)).as("min"), max(col(c)).as("max"))
 }

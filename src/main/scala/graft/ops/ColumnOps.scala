@@ -1,8 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, TimestampType}
+import org.apache.spark.sql.types.StringType
 
 /** Scalar / derived-column operators (SURVEY.md §2.1 D1–D15).
   *
@@ -74,25 +74,4 @@ object ColumnOps {
   /** D12 — lowercased filename extension (ref 44). */
   def extensionOf(fileName: Column): Column =
     lower(regexp_extract(fileName, "(\\.[^.]*)$", 1))
-
-  /** D14 — blanket strip of all string-typed columns with the H2 null→"nan"
-    * side effect (CPA ref 476-478). */
-  def blanketStrip(df: DataFrame): DataFrame = {
-    val cols = df.schema.fields.map { f =>
-      if (f.dataType == StringType) castStrNanNull(col(f.name)).as(f.name)
-      else col(f.name)
-    }
-    df.select(cols.toIndexedSeq: _*)
-  }
-
-  /** D15 — type-normalize all columns to trimmed string except timestamps
-    * (PUA ref 319-322, 370-374). */
-  def retypeAllString(df: DataFrame, keepTimestamp: Set[String]): DataFrame = {
-    val cols = df.schema.fields.map { f =>
-      if (keepTimestamp.contains(f.name)) toTimestampCoerce(col(f.name)).as(f.name)
-      else if (f.dataType == TimestampType) col(f.name)
-      else ensureString(col(f.name)).as(f.name)
-    }
-    df.select(cols.toIndexedSeq: _*)
-  }
 }

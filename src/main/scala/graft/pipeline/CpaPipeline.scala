@@ -101,13 +101,12 @@ object CpaPipeline {
       "Pay ID" -> castStrNanNull(col("Pay ID"))))
 
     // --- J1 org join → TS-Org Name (ref 487-492) ------------------------
-    val org = JoinOps.prepareLookup(in.tsOrg, Seq("TS-Org Code", "TS-Org Title"))
+    val org = Lookups.org(in.tsOrg)
     df = JoinOps.leftJoin(df, org, Seq("TS-Org Code"))
       .withColumnRenamed("TS-Org Title", "TS-Org Name")
 
     // --- J2 dept join on Dept TS-Org (ref 494-500) ----------------------
-    val dept = JoinOps.prepareLookup(in.tsDept,
-      Seq("TS-Org Dept Code", "TS-Org Dept Title"))
+    val dept = Lookups.dept(in.tsDept)
     df = JoinOps.leftJoinExpr(df, dept,
         df("Dept TS-Org") === dept("TS-Org Dept Code"))
       .withColumnRenamed("TS-Org Dept Title", "TS-Org Department Name")
@@ -118,12 +117,7 @@ object CpaPipeline {
     df = JoinOps.leftJoin(df, teLookup, Seq("UIN Job"))
 
     // --- G1 + D10 Time Entry (ref 502-509, 517-533) ---------------------
-    val temp = in.teM
-      .filter(col("TE M").isNotNull && col("Time Entry Method").isNotNull)
-      .select(castStrNanNull(col("TE M")).as("TE M"),
-              castStrNanNull(col("Time Entry Method")).as("Time Entry Method"))
-    val teMap = AggOps.modeDeterministic(temp, "TE M", "Time Entry Method")
-      .toDF("_te_key", "_te_mapped")
+    val teMap = Lookups.teModeMap(in.teM)
     df = df.withColumn("TE M", castStrNanNull(col("TE M")))
     val existing = // 'Time Entry' column does not exist pre-join (ref 524-527)
       if (df.columns.contains("Time Entry")) ensureString(col("Time Entry"))

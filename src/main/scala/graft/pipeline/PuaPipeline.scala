@@ -100,14 +100,25 @@ object PuaPipeline {
 
     // --- alias-tolerant ADJ rename (ref 256-261) ------------------------
     df = ReshapeOps.renameIfExists(df, AdjAliases)
+    // A column P1 does not select whose name is a case variant of one it
+    // does (a workbook with both `ADj Reason Code` and `Adj Reason Code`
+    // keeps the second) is renamed out of the way by position: Spark
+    // resolves names case-insensitively, so P1's `col` would match both,
+    // where pandas selects the exact name and drops the rest.
+    val selected = SourceFields.map(_.toLowerCase).toSet
+    val unselected = df.columns.toSeq.zipWithIndex.map {
+      case (n, i) if !SourceFields.contains(n) && selected(n.toLowerCase) =>
+        s"_unselected_$i"
+      case (n, _) => n
+    }
+    if (unselected != df.columns.toSeq) df = df.toDF(unselected: _*)
 
     // --- J1 org lookup (ref 263-264) ------------------------------------
-    val org = JoinOps.prepareLookup(in.tsOrg, Seq("TS-Org Code", "TS-Org Title"))
+    val org = Lookups.org(in.tsOrg)
     df = JoinOps.leftJoin(df, org, Seq("TS-Org Code"))
 
     // --- J2 dept lookup, both keys kept (ref 266-272) -------------------
-    val dept = JoinOps.prepareLookup(in.tsDept,
-      Seq("TS-Org Dept Code", "TS-Org Dept Title"))
+    val dept = Lookups.dept(in.tsDept)
     df = JoinOps.leftJoinExpr(df, dept,
       df("TS-Org Department Code") === dept("TS-Org Dept Code"))
 
@@ -117,12 +128,7 @@ object PuaPipeline {
 
     // --- G1 te_map (ref 282-299): mode of Time Entry Method per trimmed
     // TE M (ties → smallest) ----------------------------------------------
-    val te = in.teM
-      .filter(col("TE M").isNotNull && col("Time Entry Method").isNotNull)
-      .select(castStrNanNull(col("TE M")).as("TE M"),
-              castStrNanNull(col("Time Entry Method")).as("Time Entry Method"))
-    val teMap = AggOps.modeDeterministic(te, "TE M", "Time Entry Method")
-      .toDF("_te_key", "_te_mapped")
+    val teMap = Lookups.teModeMap(in.teM)
     df = JoinOps.leftJoinExpr(df, broadcast(teMap), df("TE M") === teMap("_te_key"))
 
     // --- D9 dept-title fallback (ref 273-274), J3 rename with the right
