@@ -287,7 +287,7 @@ object BenchQueries {
       val compactPath = s"$root/compact"
       if (!new java.io.File(root, "_DONE").exists()) {
         val li = Tables(s, dir, "lineitem")
-        val sink = graft.streaming.StreamingOps
+        val sink = graft.io.Compaction
           .partitionedSinkBatch(livePath, Seq("l_returnflag"))
         for (b <- 0L to 3L)
           sink(li.filter(pmod(col("l_orderkey"), lit(5)) === b), b)
@@ -329,7 +329,7 @@ object BenchQueries {
       val manifestPath = s"$root/manifest"
       if (!new java.io.File(root, "_DONE").exists()) {
         val li = Tables(s, dir, "lineitem")
-        val sink = graft.streaming.StreamingOps
+        val sink = graft.io.Compaction
           .partitionedSinkBatch(livePath, Seq("l_returnflag"))
         for (b <- 0L to 3L)
           sink(li.filter(pmod(col("l_orderkey"), lit(5)) === b), b)
@@ -381,7 +381,7 @@ object BenchQueries {
       val compactPath = s"$root/compact"
       if (!new java.io.File(root, "_DONE").exists()) {
         val li = Tables(s, dir, "lineitem")
-        val sink = graft.streaming.StreamingOps
+        val sink = graft.io.Compaction
           .partitionedSinkBatch(livePath, Seq("l_returnflag"))
         for (b <- 0L to 1L)
           sink(li.filter(pmod(col("l_orderkey"), lit(5)) === b), b)
@@ -441,7 +441,7 @@ object BenchQueries {
         val del = o.filter(pmod(col("o_orderkey"), lit(20)) === 0)
           .withColumn("o_totalprice", lit(null).cast("double"))
           .withColumn("_deleted", lit(true))
-        val sink = graft.streaming.StreamingOps
+        val sink = graft.io.Compaction
           .partitionedSinkBatch(livePath, Seq("o_orderpriority"))
         sink(ins(0), 0L)
         sink(ins(1).unionByName(upd(0)), 1L)
@@ -495,7 +495,7 @@ object BenchQueries {
         val del = o.filter(pmod(col("o_orderkey"), lit(20)) === 0)
           .withColumn("o_totalprice", lit(null).cast("double"))
           .withColumn("_deleted", lit(true))
-        val sink = graft.streaming.StreamingOps
+        val sink = graft.io.Compaction
           .partitionedSinkBatch(livePath, Seq("o_orderpriority"))
         sink(ins(0), 0L)
         sink(ins(1).unionByName(upd(0)), 1L)

@@ -621,8 +621,8 @@ object ClusterQueries {
     // reproduced through the per-cell shard artifacts
     // (GraphSearch.serveShards — seed list + closure-restricted
     // adjacency/vector maps, ONE ROW PER CELL) and the keyed-join
-    // higher-order-function serve (streamingGraphServe run on a batch
-    // frame; the identical code path the streaming twin executes).
+    // higher-order-function serve (GraphSearch.serve, the serving path
+    // for a batch frame and a query stream alike).
     // Green means the shard CLOSURE restriction is exactly sufficient:
     // every node a cell-seeded search expands (depth ≤ HOPS−1) or
     // scores (depth ≤ HOPS) is in the shard, so per-shard serving loses
@@ -640,8 +640,7 @@ object ClusterQueries {
       val q = sn.filter(col("vec_id") < 10)
         .select(col("vec_id").as("qid"), col("v").as("qv"),
                 col("nrm").as("qn"), col("cell"))
-      graft.streaming.StreamingOps.streamingGraphServe(q, shards,
-          BEAM, HOPS, 3)
+      graft.operators.GraphSearch.serve(q, shards, BEAM, HOPS, 3)
         .select(col("qid"), col("rank"), col("nid"),
                 round(col("cos"), 4).as("cos"), col("scored_n"))
         .orderBy(col("qid"), col("rank"))
@@ -753,8 +752,8 @@ object ClusterQueries {
     // query to exactly ONE shard. This closes that gap: each query
     // carries its top-2 coarse cells from the quantizer ranking and
     // joins BOTH cells' shard rows (two keyed lookups, union visited,
-    // dedup by nid before the rank cut — streamingGraphServeTop2, the
-    // identical code path the streaming twin executes). Green means the
+    // dedup by nid before the rank cut — GraphSearch.serveTop2, the
+    // serving path for batch and stream queries alike). Green means the
     // two-shard serve ≡ the batch x163 'two'-mode beam search exactly —
     // the oracle is that chain verbatim, served top-3 with the budget
     // column in the hash (a shard union that dropped or double-counted
@@ -786,8 +785,7 @@ object ClusterQueries {
         .agg(min(when(col("crn") === 1, col("cell"))).as("cell1"),
              min(when(col("crn") === 2, col("cell"))).as("cell2"))
         .join(q, "qid")
-      graft.streaming.StreamingOps.streamingGraphServeTop2(routed, shards,
-          BEAM, HOPS, 3)
+      graft.operators.GraphSearch.serveTop2(routed, shards, BEAM, HOPS, 3)
         .select(col("qid"), col("rank"), col("nid"),
                 round(col("cos"), 4).as("cos"), col("scored_n"))
         .orderBy(col("qid"), col("rank"))

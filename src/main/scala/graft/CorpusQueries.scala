@@ -1774,9 +1774,8 @@ object CorpusQueries {
     * counted, Luhn-validated ([[graft.functions.TextFunctions
     * .luhnValid]]), and the VALID ones redacted to `<CARD>` — the
     * output md5 pins the redaction bytes. One stateless per-row
-    * projection (no explode, no shuffle), which is why the streaming
-    * twin runs it verbatim on the ingest stream. `textCol` must be a
-    * plain column name (it is interpolated into the regex extract). */
+    * projection (no explode, no shuffle). `textCol` must be a plain
+    * column name (it is interpolated into the regex extract). */
   private val BPER = 8 // x167/x168: BPE merge rounds
 
   /** Corpus word-frequency domain — the BPE training/application
@@ -1805,7 +1804,7 @@ object CorpusQueries {
   /** The funnel's gate projection: heuristic quality ×10⁴ and the x136
     * repetition flag — the expensive per-doc work, shared by x158 and
     * x159. */
-  private[graft] def gateStage(docs: DataFrame): DataFrame = docs
+  private def gateStage(docs: DataFrame): DataFrame = docs
     .withColumn("q",
       round(T.qualityScore(col("text")) * 10000).cast("long"))
     .withColumn("_rep",
@@ -2049,7 +2048,7 @@ object CorpusQueries {
       .join(broadcast(model), Seq("h"), "left_outer")
       .na.fill(0L, Seq("cp", "cn"))
       .crossJoin(broadcast(consts))
-      // single-class training split fails LOUD (the streaming twin's
+      // single-class training split fails LOUD (a
       // require(np > 0 && nn > 0), spelled as an expression here because
       // the totals only exist at execution time): ilog2x256(0) = −256 is
       // out of contract and would silently bias every score

@@ -116,8 +116,8 @@ object ExtensionQueries {
         .select(col("doc_id"), T.rollingHash(col("text")).as("rh"))
         .orderBy(col("doc_id"))),
 
-    // batch sessionization (gaps-and-islands): the batch twin of
-    // StreamingOps.sessionize — lag + cumulative flag sum, 30-min gap
+    // batch sessionization (gaps-and-islands): lag + cumulative flag
+    // sum, 30-min gap
     "x13_sessionize_batch" -> ((s, dir) => {
       val byUser = Window.partitionBy(col("user_id"))
         .orderBy(col("ts"), col("event_id"))
@@ -606,8 +606,7 @@ object ExtensionQueries {
 
     // X91 — INCREMENTAL sketch maintenance: merge a new batch's CMS
     // into the persisted corpus sketch WITHOUT re-scanning the corpus —
-    // the sketch twin of x68's incremental vocabulary (and the batch
-    // form of the streaming maintenance in StreamingOps). The
+    // the sketch twin of x68's incremental vocabulary. The
     // "persisted" side is derived in-query (doc_id % 10 ≠ 0, the x68
     // device) so the oracle can assert the property that makes the
     // pattern sound: base ⊎ batch merged by unionAll + re-sum must
@@ -1066,11 +1065,11 @@ object ExtensionQueries {
     // classic KMV/theta forms made INTEGER-EXACT so the oracle checks
     // values, not tolerance bands: est = (k−1)·2⁴⁸ div h_(k) when the
     // sketch saturates (exact = sketch size below that); union sketches
-    // compose by merging the two lists and re-taking the bottom k (the
-    // same closure the streaming bottom-k state uses); intersection is the
-    // theta-sketch rule matches·est_union div k. Exact distinct counts ride
-    // along as audit truth — at corpus scale only the k-long sketches move,
-    // and source-pair math runs over a |sources|-row broadcast frame.
+    // compose by merging the two lists and re-taking the bottom k;
+    // intersection is the theta-sketch rule matches·est_union div k.
+    // Exact distinct counts ride along as audit truth — at corpus scale
+    // only the k-long sketches move, and source-pair math runs over a
+    // |sources|-row broadcast frame.
     "x94_kmv_cardinality" -> ((s, dir) => {
       val k = 64
       val maxNum = (k - 1).toLong * (1L << 48) // (k−1)·2⁴⁸, < 2⁶³
@@ -1151,8 +1150,7 @@ object ExtensionQueries {
     // is CROSS-document; this is the within-document quality rule family
     // that catches boilerplate loops and degenerate generations. One
     // codegen'd projection per doc — no explode, no shuffle (the
-    // bigram-multiplicity fold is sort + longest-equal-run per row);
-    // stateless, so the streaming twin is the same projection verbatim.
+    // bigram-multiplicity fold is sort + longest-equal-run per row).
     "x136_doc_repetition" -> ((s, dir) =>
       T.docRepetition(Tables(s, dir, "documents"), "doc_id", "text")
         .orderBy(col("doc_id"))),

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Anti-entropy digest arithmetic (x111 / x116 / the streaming twin).
+/** Anti-entropy digest arithmetic (x111 / x116).
   *
   * The bucket digest is the SUM of per-row 48-bit md5 fingerprints. A
   * plain `sum(long)` is only valid while a bucket holds ≲ 2¹⁵ rows:

@@ -151,9 +151,7 @@ object TextFunctions {
     * (`idCol`, `textCol`): duplicate-word count, most-frequent-bigram
     * multiplicity, duplicate-trigram count, and the integer-arithmetic
     * repetitive flag (top bigram > 9% of bigram instances). One
-    * codegen'd projection — no explode, no shuffle, no state — so the
-    * streaming twin runs it verbatim on the ingest stream
-    * ([[graft.streaming.StreamingOps.streamingRepetitionScreen]]). */
+    * codegen'd projection — no explode, no shuffle, no state. */
   def docRepetition(df: org.apache.spark.sql.DataFrame, idCol: String,
                     textCol: String): org.apache.spark.sql.DataFrame =
     df.select(
@@ -241,18 +239,6 @@ object TextFunctions {
     val sh = shingles(text, n)
     array((0 until k).map(minhashComponent(sh, _)): _*)
   }
-
-  /** Signature from an ALREADY-MATERIALIZED shingle column. Callers that
-    * band or otherwise reuse the signature should stage the computation
-    * (`select(shingles) → select(minhashFromShingles) → select(bands)`):
-    * inlining `minhashSignature(text)` into a consumer duplicates the whole
-    * shingle subtree once per component/band, which blows past the codegen
-    * method-size limit and silently falls back to interpreted eval —
-    * hundreds of times slower. Staged projections keep each expression
-    * small (codegen-friendly), and CollapseProject leaves them alone
-    * because the producer is non-cheap and multiply-referenced. */
-  def minhashFromShingles(shingleCol: Column, k: Int): Column =
-    array((0 until k).map(minhashComponent(shingleCol, _)): _*)
 
   /** LSH band keys: adjacent signature components hashed together; docs
     * sharing any band key are near-dup candidates. */

@@ -43,11 +43,6 @@ object VectorFunctions {
   def quantizeInt8(v: Column, scale: Column): Column =
     transform(toDouble(v), x => round(x * 127.0d / scale).cast("int"))
 
-  /** Dequantize back to doubles (q·scale/127) — same elementwise-exact
-    * contract as [[quantizeInt8]]. */
-  def dequantizeInt8(q: Column, scale: Column): Column =
-    transform(q, x => x.cast("double") * scale / 127.0d)
-
   /** Cosine similarity; null when either norm is zero. */
   def cosine(a: Column, b: Column): Column = {
     val d = dot(a, b)
@@ -58,39 +53,12 @@ object VectorFunctions {
   }
 
   /** `bits`-bit coordinate-hyperplane sign band: bit i is set when
-    * `v[off+i] >= 0`. The axis-aligned member of the [[lshBucket]] family,
-    * chosen when the bucket id must be reproducible in ANSI SQL (x69 uses
+    * `v[off+i] >= 0`. An axis-aligned sign-bit LSH bucket, chosen when
+    * the bucket id must be reproducible in ANSI SQL (x69 uses
     * two of these as LSH bands; sign bits survive float→double widening
     * exactly, so the band — and the candidate set — is engine-identical). */
   def signBand(v: Column, off: Int, bits: Int): Column =
     (0 until bits).map { i =>
       when(element_at(v, off + i + 1) >= 0, lit(1L << i)).otherwise(lit(0L))
     }.reduce(_ + _)
-
-  /** Sign-bit LSH bucket for a vector: h pseudo-random hyperplanes whose
-    * components are derived deterministically from md5(seed:plane:dim) —
-    * reproducible across runs and engines, no RNG state. The bucket id is
-    * the h-bit sign pattern of the projections. Vectors in the same bucket
-    * are ANN candidates; at scale this turns an O(N²) search into a
-    * bucket-local join. */
-  def lshBucket(v: Column, planes: Int, dims: Int, seed: Int = 42): Column = {
-    val dv = toDouble(v)
-    val bits = (0 until planes).map { p =>
-      // hyperplane component c_pd in [-1,1): from the first 8 md5 hex chars
-      val proj = (0 until dims).map { d =>
-        val h = conv(lit(md5Hex(s"$seed:$p:$d").substring(0, 8)), 16, 10)
-          .cast("long")
-        val coef = (h.cast("double") / lit(2147483648.0)) - 1.0
-        element_at(dv, d + 1) * coef
-      }.reduce(_ + _)
-      when(proj >= 0, lit(1L << p)).otherwise(lit(0L))
-    }
-    bits.reduce(_ + _)
-  }
-
-  private def md5Hex(s: String): String = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8"))
-    d.map("%02x".format(_)).mkString
-  }
 }

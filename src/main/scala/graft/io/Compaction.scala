@@ -119,31 +119,6 @@ object Compaction {
     }
   }
 
-  /** Compaction planning on the LISTING alone (no data read, no job):
-    * greedily bin files smaller than `smallBytes` into rewrite groups of
-    * ≈ `targetBytes`, first-fit over the size-descending order — the
-    * OPTIMIZE file-selection step. Files already at or above
-    * `smallBytes` are left in place (rewriting them buys nothing).
-    * Deterministic: ties broken by path. */
-  def planCompaction(files: Seq[(String, Long)], smallBytes: Long,
-                     targetBytes: Long): Seq[Seq[String]] = {
-    require(smallBytes <= targetBytes,
-      "a file counted small must fit its rewrite group")
-    val small = files.filter(_._2 < smallBytes)
-      .sortBy { case (p, sz) => (-sz, p) }
-    val bins = scala.collection.mutable.ArrayBuffer
-      .empty[(scala.collection.mutable.ArrayBuffer[String], Long)]
-    small.foreach { case (p, sz) =>
-      bins.indexWhere(_._2 + sz <= targetBytes) match {
-        case -1 => bins += ((scala.collection.mutable.ArrayBuffer(p), sz))
-        case i  => val (b, tot) = bins(i); b += p; bins(i) = (b, tot + sz)
-      }
-    }
-    // a singleton group rewrites one small file into one small file —
-    // pointless I/O; only multi-file groups are worth executing
-    bins.toSeq.map(_._1.toSeq).filter(_.size > 1)
-  }
-
   private def zoneAggs(cols: Seq[String]): Seq[Column] =
     count(lit(1)).as("rows") +: cols.flatMap { c =>
       Seq(min(col(c)).as(s"${c}_min"), max(col(c)).as(s"${c}_max"),
@@ -182,9 +157,9 @@ object Compaction {
   }
 
   // ------------------------------------------------------------------
-  // Maintenance of the streaming-ingest layout
-  // (graft.streaming.StreamingOps.partitionedSinkBatch): business
-  // partitions with a trailing `_batch_id=<id>` level. The sink makes
+  // The streaming-ingest layout ([[partitionedSinkBatch]]) and its
+  // maintenance: business partitions with a trailing `_batch_id=<id>`
+  // level. The sink makes
   // every micro-batch idempotent, but it also makes the table accrete
   // one directory per (partition, batch) forever — at one batch a
   // minute that is half a million directories a year, and every scan
@@ -212,10 +187,74 @@ object Compaction {
     FileSystem.get(new Path(path).toUri,
                    spark.sparkContext.hadoopConfiguration)
 
-  /** `_batch_id=<id>` directories under a [[graft.streaming.StreamingOps
-    * .partitionedSinkBatch]] layout, as (id, path) — a pure listing,
-    * no data read. Empty when the live directory does not exist yet
-    * (a stream that has not committed its first batch). */
+  /** The ingest sink (x172's layout written by a stream): a stream
+    * appending into the partitioned columnar layout ([[graft.io.TableIo.writePartitioned]])
+    * with EXACTLY-ONCE semantics. Returns the `foreachBatch` body; the
+    * caller wires it with a checkpoint:
+    * {{{
+    *   stream.writeStream
+    *     .foreachBatch(Compaction.partitionedSinkBatch(path, Seq("dt")))
+    *     .option("checkpointLocation", ckpt).start()
+    * }}}
+    *
+    * Exactly-once mechanics: each micro-batch writes under an extra
+    * trailing `_batch_id=<id>` partition level in DYNAMIC partition-
+    * overwrite mode, so a batch REPLAYED after a failure (the at-least-
+    * once window between a sink write and the checkpoint commit)
+    * overwrites exactly its own `(partition values, _batch_id)`
+    * directories — idempotent — while every other batch's directories
+    * are untouched. The business partition column stays the TOP
+    * directory level, so readers prune on it exactly as on the batch
+    * layout (CompactionSpec pins PartitionFilters on the read), and the
+    * extra level is invisible to partition-pruned scans.
+    *
+    * Why not Spark's built-in file sink (`writeStream.format("orc")`):
+    * it is also exactly-once, but through a driver-side `_spark_metadata`
+    * transaction log that grows with every batch for the table's
+    * lifetime, must be compacted, and makes the directory unreadable as
+    * a PLAIN columnar layout (readers that don't consult the log see
+    * uncommitted files). The batch-id partition level carries the same
+    * guarantee in the layout itself — any engine can read the directory,
+    * and retention/compaction work per directory ([[compactIngest]]
+    * and [[vacuumLive]] below). */
+  def partitionedSinkBatch(path: String, partitionCols: Seq[String],
+                           format: String = "parquet")
+      : (DataFrame, Long) => Unit = {
+    require(partitionCols.nonEmpty,
+      "partitionedSinkBatch needs at least one partition column")
+    require(!partitionCols.contains("_batch_id"),
+      "_batch_id is the sink's idempotency level — it cannot also be a " +
+        "business partition column")
+    (batch: DataFrame, batchId: Long) => {
+      val spark = batch.sparkSession
+      val key = "spark.sql.sources.partitionOverwriteMode"
+      val old = spark.conf.getOption(key)
+      spark.conf.set(key, "dynamic")
+      try
+        batch.withColumn("_batch_id", lit(batchId))
+          .write.mode("overwrite")
+          .partitionBy((partitionCols :+ "_batch_id"): _*)
+          .format(format).save(path)
+      finally old.fold(spark.conf.unset(key))(v => spark.conf.set(key, v))
+      // SEAL the batch: its directories exist from the first task
+      // commit onward, so a maintenance fold running beside the stream
+      // could otherwise read a half-written batch, advance the
+      // watermark past it, and permanently hide the late-arriving rows
+      // behind the `> watermark` tail filter. The marker is written
+      // only after save() returns (the batch is complete), it is
+      // underscore-prefixed (invisible to data readers), and a crash
+      // between save and marker just replays the batch — the dynamic
+      // overwrite and the marker rewrite are both idempotent.
+      // compactIngest folds ONLY sealed batches.
+      fsOf(spark, path).create(new Path(path, s"_sealed_$batchId"), true)
+        .close()
+    }
+  }
+
+  /** `_batch_id=<id>` directories under a [[partitionedSinkBatch]]
+    * layout, as (id, path) — a pure listing, no data read. Empty when
+    * the live directory does not exist yet (a stream that has not
+    * committed its first batch). */
   def batchDirs(spark: SparkSession, livePath: String)
       : Seq[(Long, String)] = {
     val root = new Path(livePath)
@@ -241,7 +280,7 @@ object Compaction {
   }
 
   /** Batch ids the sink has SEALED (the `_sealed_<id>` markers
-    * [[graft.streaming.StreamingOps.partitionedSinkBatch]] writes after
+    * [[partitionedSinkBatch]] writes after
     * each batch's save returns). A batch's directories exist from its
     * first task commit onward, so directory presence alone cannot
     * distinguish a complete batch from one mid-write — only sealed

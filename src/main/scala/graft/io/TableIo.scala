@@ -152,29 +152,6 @@ object TableIo {
       .write.mode("overwrite").parquet(path)
   }
 
-  /** JSONL (one JSON object per line) source — the interchange format of
-    * training-data pipelines. An explicit schema skips Spark's
-    * inference pass (which reads the data twice) and pins types against
-    * drift; without one, inference is accepted for exploration. Sharded
-    * and splittable: a directory of .jsonl parts scans in parallel like
-    * any file source. */
-  def readJsonl(spark: SparkSession, path: String,
-                schema: Option[org.apache.spark.sql.types.StructType] = None)
-      : DataFrame = {
-    val reader = spark.read
-    schema.fold(reader)(s => reader.schema(s)).json(path)
-  }
-
-  /** JSONL sink: one object per line, sharded by partition (a 100 TB
-    * corpus writes N files in parallel — never a single driver-side
-    * file). `shards` repartitions when the caller wants a fixed output
-    * layout (e.g. one shard per downstream loader worker). */
-  def writeJsonl(df: DataFrame, path: String,
-                 shards: Option[Int] = None): Unit = {
-    val out = shards.fold(df)(n => df.repartition(n))
-    out.write.mode("overwrite").json(path)
-  }
-
   /** SCHEMA-EVOLUTION READ beyond added columns: unify N generations of
     * a long-lived table whose column TYPES drifted (gen 1 wrote
     * l_quantity as int/float, gen 2 as long/double — the other drift

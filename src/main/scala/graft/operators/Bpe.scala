@@ -91,7 +91,7 @@ object Bpe {
         .localCheckpoint() // 1 row, read by the fold and the output
       // pair exhaustion fails LOUD, at ZERO extra jobs: an empty `best`
       // would silently erase the segmentation under a cross join (the
-      // class the segmentWords/streaming artifact guards exist for), so
+      // class the segmentWords artifact guards exist for), so
       // the merge frame attaches by LEFT join and a null merge rule
       // raises from the fold job itself — the raise must sit OUTSIDE
       // applyMerge's lambda (an exhausted domain is all 1-token words,
@@ -379,14 +379,6 @@ object Bpe {
       .toDF("word", "wcount", "toks")
     (mdf, sdf)
   }
-
-  /** The learned merges as ONE row holding an array of (round, a, b)
-    * structs in round order — the frozen-tokenizer artifact the
-    * streaming twin broadcasts onto the ingest stream
-    * ([[graft.streaming.StreamingOps.streamingBpeSegment]]). */
-  def mergesArtifact(merges: DataFrame): DataFrame =
-    merges.agg(sort_array(collect_list(
-      struct(col("round"), col("a"), col("b")))).as("merges"))
 
   /** Apply a learned merge table — `merges` as (round, a, b) — to a
     * fresh word domain WITHOUT pair counting (x168's ingest economics:

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.{TextFunctions => T, VectorFunctions => V}
+import graft.functions.{TextFunctions => T}
 import graft.ops.CacheScope
 
 /** Whole-dataset deduplication operators for training-data pipelines.
@@ -180,39 +180,6 @@ object DedupOperators {
               col("band_key") === col("_bk") && col("_c") === col("_cb") &&
               col("id_a") < col("id_b") &&
               abs(col("_ta") - col("_tb")) <= window)
-      .select("id_a", "id_b").distinct()
-  }
-
-  /** Production-scale MinHash candidates using the native one-pass
-    * [[graft.functions.expr.MinHashSig]] expression (XXH64, k mins in one
-    * traversal) instead of the k-pass md5 composition — same banding join.
-    * Requires `MinHashSig.register(spark)` / GraftExtensions. */
-  def minhashCandidatesFast(df: DataFrame, idCol: String, textCol: String,
-                            shingleN: Int = 3, k: Int = 8,
-                            bands: Int = 4): DataFrame = {
-    val rows = k / bands
-    // staged like signatureIndex: one native one-pass MinHashSig eval per
-    // row, band keys over the materialized array
-    val withSig = spread(df)
-      .select(col(idCol).as("_id"), T.words(col(textCol)).as("_w"))
-      // degenerate-doc exclusion, as in [[signatureIndex]]
-      .filter(size(col("_w")) >= shingleN)
-      .select(col("_id"),
-        T.shinglesFromWords(col("_w"), shingleN).as("_shg"))
-      .select(col("_id"),
-        graft.functions.expr.MinHashSig(col("_shg"), k).as("_sig"))
-    val bandKeys = array((0 until bands).map { b =>
-      hash((0 until rows).map(r =>
-        element_at(col("_sig"), b * rows + r + 1)): _*)
-    }: _*)
-    val banded = withSig
-      .select(col("_id"), posexplode(bandKeys))
-      .toDF("_id", "_band_idx", "_band_key")
-    val a = banded.select(col("_band_idx"), col("_band_key"), col("_id").as("id_a"))
-    val b = banded.select(col("_band_idx").as("_bi2"), col("_band_key").as("_bk2"),
-                          col("_id").as("id_b"))
-    a.join(b, col("_band_idx") === col("_bi2") &&
-              col("_band_key") === col("_bk2") && col("id_a") < col("id_b"))
       .select("id_a", "id_b").distinct()
   }
 
@@ -405,21 +372,5 @@ object DedupOperators {
     val victims = labels.filter(col("id") =!= col("label"))
       .select(col("id").as(idCol))
     exact.join(victims, Seq(idCol), "left_anti")
-  }
-
-  /** Embedding near-dups: sign-bit LSH bucket join + cosine verify. */
-  def embeddingNearDups(df: DataFrame, idCol: String, vecCol: String,
-                        dims: Int, threshold: Double,
-                        planes: Int = 8): DataFrame = {
-    val bucketed = df.select(col(idCol).as("_id"), col(vecCol).as("_v"),
-      V.lshBucket(col(vecCol), planes, dims).as("_bucket"))
-    val a = bucketed.select(col("_bucket"), col("_id").as("id_a"),
-                            col("_v").as("_va"))
-    val b = bucketed.select(col("_bucket").as("_bucket2"), col("_id").as("id_b"),
-                            col("_v").as("_vb"))
-    a.join(b, col("_bucket") === col("_bucket2") && col("id_a") < col("id_b"))
-      .withColumn("cos", V.cosine(col("_va"), col("_vb")))
-      .filter(col("cos") >= threshold)
-      .select(col("id_a"), col("id_b"), col("cos"))
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{VectorFunctions => V}
@@ -190,13 +190,171 @@ object GraphSearch {
     // seeds); a cell whose closure carries no out-edges simply has a
     // null gmap — the per-lookup coalesce in the serve path covers it.
     // beam/hops ride IN the artifact: the closure depth is a property
-    // of the build, so a serve call must prove it matches (the
-    // streaming serve validates before the first micro-batch) — a
-    // shard built with smaller hops would otherwise silently return
-    // incomplete results behind the per-lookup coalesce.
+    // of the build, so a serve call must prove it matches ([[serve]]
+    // validates before the query is planned) — a shard built with
+    // smaller hops would otherwise silently return incomplete results
+    // behind the per-lookup coalesce.
     sd.join(gm, Seq("cell"), "left").join(vm, Seq("cell"), "left")
       .select(col("cell"), col("seeds"), col("gmap"), col("vmap"),
               lit(beam).as("beam"), lit(hops).as("hops"))
+  }
+
+  /** Graph-ANN SERVING of a query frame (batch or stream) over the PER-CELL
+    * sharded artifacts ([[serveShards]]: one row per coarse cell — seed list,
+    * closure-restricted adjacency and vector maps). Each query joins to ITS
+    * cell's shard row — one KEYED equi-join on `cell` (stream-static on a
+    * stream: zero state), no whole-corpus broadcast — and the whole fixed-hop
+    * beam search runs INSIDE the joined row as higher-order array functions:
+    * seed from the shard's seed list (self excluded), then `hops` rounds of
+    * sort-by-(cos DESC NULLS LAST, nid ASC) → take `beam` → expand `gmap` →
+    * score fresh candidates via `vmap`. Per-row work is bounded by the same
+    * constant budget as the batch operator (≤ beam + hops·beam·kg scored
+    * candidates); the shard's closure restriction covers every node a
+    * cell-seeded search can touch, so the visited set is the identical pure
+    * function of (graph, seeds, query) — GraphSearchSpec reconciles the
+    * served answer with [[search]] over a query stream split ACROSS shards,
+    * and x170 hash-proves shard ≡ batch at 3 SFs. Output per query: (qid,
+    * rank, nid, cos, scored_n) for rank ≤ `k`.
+    *
+    * This is the deployment shape for query-time ANN at ingest: each serving
+    * executor holds its cell's shard resident (the HNSW convention), queries
+    * route to shards by coarse cell upstream, and corpus growth adds SHARDS,
+    * never widens a global artifact. */
+  def serve(queries: DataFrame, artifacts: DataFrame,
+            beam: Int, hops: Int, k: Int): DataFrame = {
+    validateShardParams(artifacts, beam, hops)
+    // keyed join: each query row picks up exactly its cell's shard
+    // (seeds + closure maps)
+    serveCore(
+      queries.join(artifacts, "cell"),
+      slice(filter(
+        coalesce(col("seeds"), array().cast("array<long>")),
+        id => id =!= col("qid")), 1, beam),
+      id => coalesce(element_at(col("gmap"), id),
+                     array().cast("array<long>")),
+      id => element_at(col("vmap"), id),
+      beam, hops, k)
+  }
+
+  /** [[serve]] with TOP-2-CELL SEED INSURANCE — the deployment shape of
+    * x163's measured result: top-2 seeding at the same total seed count holds
+    * 91–94% recall where a mis-seeded nprobe=1 serve recalls 0–6% (and static
+    * long-range edges recover ~0–21%, x171), so the near-boundary query's
+    * insurance belongs on the SEEDING side of the serving path, not in the
+    * graph. Each query carries its top-2 coarse cells (`cell1`, `cell2` — the
+    * quantizer's two nearest centroids) and joins BOTH cells' shard rows —
+    * two keyed stream-static equi-joins, still zero state — seeding beam/2
+    * ids from each shard's seed list (self excluded; x163's 'two' mode
+    * exactly) and resolving every adjacency/vector lookup through the first
+    * shard that carries the key (closures overlap, and where they do the
+    * entries are identical by construction, so lookup order cannot matter).
+    * The visited set dedups by nid before every beam cut and the final rank,
+    * exactly like the batch union-distinct. Budget: ≤ 2× the nprobe=1 serve
+    * (both cells' seed neighborhoods expand) and still CONSTANT in corpus
+    * size; x178 hash-proves the two-shard serve ≡ the batch x163 top-2 search
+    * at 3 SFs.
+    *
+    * Contract: `beam` must be even (the per-cell split is beam/2) and both
+    * cells must exist in the artifact (a query with one legitimate cell
+    * repeats it in both columns — the seed dedup collapses the duplicate
+    * seeds, leaving a plain nprobe=1 serve at half seeds). */
+  def serveTop2(queries: DataFrame, artifacts: DataFrame,
+                beam: Int, hops: Int, k: Int): DataFrame = {
+    require(beam % 2 == 0,
+      s"top-2 serving splits the seed budget per cell — beam must be " +
+        s"even, got $beam")
+    validateShardParams(artifacts, beam, hops)
+    def shardAs(i: Int): DataFrame = artifacts.select(
+      col("cell").as(s"cell$i"), col("seeds").as(s"seeds$i"),
+      col("gmap").as(s"gmap$i"), col("vmap").as(s"vmap$i"))
+    def halfSeeds(c: Column): Column =
+      slice(filter(coalesce(c, array().cast("array<long>")),
+        id => id =!= col("qid")), 1, beam / 2)
+    serveCore(
+      queries.join(shardAs(1), "cell1").join(shardAs(2), "cell2"),
+      array_distinct(concat(halfSeeds(col("seeds1")),
+                            halfSeeds(col("seeds2")))),
+      id => coalesce(element_at(col("gmap1"), id),
+                     element_at(col("gmap2"), id),
+                     array().cast("array<long>")),
+      id => coalesce(element_at(col("vmap1"), id),
+                     element_at(col("vmap2"), id)),
+      beam, hops, k)
+  }
+
+  /** One-time artifact validation before the serve is planned (the shard side
+    * of the join — |cells| rows, one tiny job): the shard closure depth is a
+    * property of the BUILD, so serving a shard built with different beam/hops
+    * would silently return incomplete results behind the per-lookup coalesce.
+    * [[serveShards]] stamps its parameters into every row; this requires them
+    * to match the serve call's. */
+  private def validateShardParams(artifacts: DataFrame, beam: Int,
+                                  hops: Int): Unit = {
+    require(artifacts.columns.contains("beam") &&
+        artifacts.columns.contains("hops"),
+      "shard artifact carries no beam/hops columns — rebuild it with " +
+        "GraphSearch.serveShards (the closure depth must be provable)")
+    val ps = artifacts.select(col("beam"), col("hops")).distinct().collect()
+    require(ps.length == 1,
+      s"shard artifact carries ${ps.length} distinct (beam, hops) " +
+        "pairs — expected exactly one build generation")
+    val (ab, ah) = (ps(0).getInt(0), ps(0).getInt(1))
+    require(ab == beam && ah == hops,
+      s"shard artifact was built with beam=$ab hops=$ah but serve was " +
+        s"called with beam=$beam hops=$hops — a mismatched closure " +
+        "depth silently drops reachable candidates; rebuild the shards " +
+        "or match the call")
+  }
+
+  /** The shared fixed-hop beam-search serve loop over a query frame
+    * already joined to its shard row(s): `seedIds` is the self-excluded
+    * seed id array, `gLookup`/`vLookup` resolve a node id to its
+    * out-adjacency / (v, nrm) struct through whatever shard columns the
+    * caller joined. Everything else — the (cos DESC NULLS LAST, nid
+    * ASC) rank, the per-hop beam cut, the visited-set dedup by nid, the
+    * budget column — is identical across nprobe=1 and top-2 serving. */
+  private def serveCore(joined: DataFrame, seedIds: Column,
+                        gLookup: Column => Column,
+                        vLookup: Column => Column,
+                        beam: Int, hops: Int, k: Int): DataFrame = {
+    // comparator for (cos DESC NULLS LAST, nid ASC) — the batch rank
+    def cmp(l: Column, r: Column): Column = {
+      val byId = when(l.getField("nid") < r.getField("nid"), -1)
+        .when(l.getField("nid") > r.getField("nid"), 1).otherwise(0)
+      val lc = l.getField("cos"); val rc = r.getField("cos")
+      when(lc.isNull && rc.isNull, byId)
+        .when(lc.isNull, 1).when(rc.isNull, -1)
+        .when(lc > rc, -1).when(lc < rc, 1)
+        .otherwise(byId)
+    }
+    def scoreOf(id: Column): Column = {
+      val e = vLookup(id)
+      val cos = when(col("qn") === 0.0 || e.getField("nrm") === 0.0,
+          lit(null).cast("double"))
+        .otherwise(V.dot(
+            col("qv"), e.getField("v")) / (col("qn") * e.getField("nrm")))
+      struct(id.as("nid"), cos.as("cos"))
+    }
+    var out = joined.withColumn("visited", transform(seedIds, scoreOf(_)))
+    for (_ <- 1 to hops) {
+      out = out
+        .withColumn("_beam", slice(array_sort(col("visited"), cmp), 1, beam))
+        .withColumn("_fresh",
+          filter(
+            array_distinct(flatten(transform(col("_beam"), b =>
+              gLookup(b.getField("nid"))))),
+            id => id =!= col("qid") &&
+              !exists(col("visited"), v => v.getField("nid") === id)))
+        .withColumn("visited",
+          concat(col("visited"), transform(col("_fresh"), scoreOf(_))))
+    }
+    out
+      .select(col("qid"), size(col("visited")).cast("long").as("scored_n"),
+              posexplode(array_sort(col("visited"), cmp)))
+      .filter(col("pos") < k)
+      .select(col("qid"), (col("pos") + 1).as("rank"),
+              col("col").getField("nid").as("nid"),
+              col("col").getField("cos").as("cos"), col("scored_n"))
   }
 
   /** The serve/don't-serve decision, OPERATIONALIZED (x165): the

@@ -170,10 +170,8 @@ object KMeansDet {
 
   /** [[assign]] keeping the double vector and its norm, as a PURE
     * projection — no persist, no shuffle (for k ≤ [[LiteralFormMaxK]] no
-    * join either), so it is legal on a STREAMING frame: the shape
-    * [[graft.streaming.StreamingOps.streamingSemanticScreen]] maps over
-    * arriving vectors. Batch consumers that read the frame more than once
-    * want [[assignWithVec]] instead. */
+    * join either), so it is legal on a STREAMING frame. Batch consumers
+    * that read the frame more than once want [[assignWithVec]] instead. */
   def labeled(corpus: DataFrame, m: Model, idCol: String = "vec_id",
               vecCol: String = "embedding"): DataFrame =
     assignPass(corpus.select(col(idCol).as("_id"),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Multimodal column plumbing: image/audio/video as opaque `binary`
@@ -32,46 +32,11 @@ object Multimodal {
     (pmod(length(payload) * 7, lit(480)) + 1).as("height"),
     lit("fakeimg").as("codec"))
 
-  /** STUB resize — records the request in metadata; a real impl transforms
-    * payload bytes with the same signature. */
-  def resizeStub(decoded: Column, w: Int, h: Int): Column = struct(
-    lit(w).as("width"), lit(h).as("height"),
-    decoded.getField("codec").as("codec"))
-
   /** Frame sampling plan for video payloads: every `stride`-th frame index
     * up to n_frames — pure plan computation, runs before any decode so at
     * scale only the selected frames are ever decoded. */
   def frameSamplePlan(nFrames: Column, stride: Int): Column =
     filter(sequence(lit(0), nFrames - 1), i => i % stride === 0)
-
-  final case class MediaRow(id: String, payload: Array[Byte])
-  final case class DecodedRow(id: String, width: Int, height: Int,
-                              codec: String)
-
-  /** Batch decode boundary — the Scala analog of a `mapInPandas` codec
-    * worker: rows stream through `mapPartitions`, so a real decoder gets
-    * amortized per-partition init (codec contexts, native buffers) and the
-    * data never collects to the driver. The decode function itself is the
-    * STUB (the container ships no codecs); the batch shape, encoder
-    * signature, and partition-local iteration are the real contract a
-    * native/JNI decoder would drop into. */
-  def decodeBatch(media: Dataset[MediaRow])
-                 (decode: Array[Byte] => (Int, Int, String) = stubDecode)
-      : Dataset[DecodedRow] = {
-    implicit val enc = Encoders.product[DecodedRow]
-    media.mapPartitions { rows =>
-      // per-partition init would happen here (once per task, not per row)
-      rows.map { r =>
-        val (w, h, c) = decode(r.payload)
-        DecodedRow(r.id, w, h, c)
-      }
-    }
-  }
-
-  /** Deterministic stub: fake dimensions from the payload bytes. */
-  def stubDecode(payload: Array[Byte]): (Int, Int, String) =
-    (payload.length % 640 + 1,
-     (payload.length * 7) % 480 + 1, "fakeimg")
 
   /** Partition media rows into size classes so large payloads don't skew
     * task runtimes: returns a bucketing column for repartitionByRange. */

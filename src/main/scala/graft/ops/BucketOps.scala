@@ -47,9 +47,4 @@ object BucketOps {
     }
     spark.table(table)
   }
-
-  /** True when the physical plan of `df` contains no shuffle exchange —
-    * the property bucketed joins buy. */
-  def isExchangeFree(df: DataFrame): Boolean =
-    !df.queryExecution.executedPlan.toString.contains("Exchange")
 }

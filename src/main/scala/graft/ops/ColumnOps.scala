@@ -70,8 +70,4 @@ object ColumnOps {
 
   def defaultIfMissing(c: Column, default: String): Column =
     when(isMissingMarker(c), lit(default)).otherwise(c)
-
-  /** D12 — lowercased filename extension (ref 44). */
-  def extensionOf(fileName: Column): Column =
-    lower(regexp_extract(fileName, "(\\.[^.]*)$", 1))
 }

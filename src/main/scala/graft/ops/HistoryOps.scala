@@ -20,10 +20,4 @@ object HistoryOps {
     df.withColumn("valid_from", col(tsCol))
       .withColumn("valid_to", lead(col(tsCol), 1).over(w))
   }
-
-  /** The row valid at `at` for each key: valid_from ≤ at < valid_to
-    * (open interval rows match any later `at`). */
-  def snapshotAt(intervals: DataFrame, at: Column): DataFrame =
-    intervals.filter(col("valid_from") <= at &&
-      (col("valid_to").isNull || col("valid_to") > at))
 }

@@ -31,25 +31,10 @@ object JoinOps {
     * join whose output row count is checked against the input. Implemented
     * with `observe` so the check costs no extra Spark job — the metric is
     * collected as a side effect of whatever action runs the plan. The
-    * caller reads the observation after an action; in dev mode
-    * [[leftJoinGuardedEager]] runs the counts immediately. */
+    * caller reads the observation after an action. */
   def leftJoinGuarded(df: DataFrame, lookup: DataFrame, keys: Seq[String],
                       guardName: String): DataFrame =
     df.observe(s"${guardName}_before", count(lit(1)))
       .join(broadcast(lookup), keys, "left")
       .observe(s"${guardName}_after", count(lit(1)))
-
-  /** Dev-mode variant: immediate before/after counts + warning, exactly the
-    * reference's behavior (warn, don't abort — ref 229-231). */
-  def leftJoinGuardedEager(df: DataFrame, lookup: DataFrame,
-                           keys: Seq[String], what: String): DataFrame = {
-    val before = df.count()
-    val out = df.join(broadcast(lookup), keys, "left")
-    val after = out.count()
-    if (after != before)
-      System.err.println(
-        s"[graft] WARN: join '$what' changed row count $before -> $after " +
-        "(duplicate lookup keys?)")
-    out
-  }
 }

@@ -62,16 +62,9 @@ object QualityOps {
   final case class RefIntegrity(col: String, dim: DataFrame, dimKey: String)
       extends Check { def name = s"ref($col)" }
 
-  /** Evaluate `checks` against `df` → one row per check:
-    * (check, observed, violations, pass). `observed` is the row count
-    * for row-level checks, the distinct-key count for Unique, and the
-    * distinct non-null child-key count for RefIntegrity. */
-  /** Row-level violation predicate for a check — shared by the batch
-    * [[report]] and the streaming counter
-    * ([[graft.streaming.StreamingOps.streamingQualityCounts]]). Only
-    * row-level checks have one; set-level checks (Unique, RefIntegrity)
-    * throw. */
-  private[graft] def rowViolation(c: Check): Column = c match {
+  /** Row-level violation predicate for a check. Only row-level checks
+    * have one; set-level checks (Unique, RefIntegrity) throw. */
+  private def rowViolation(c: Check): Column = c match {
     case NotNull(cl, blank) =>
       val base = col(cl).isNull
       if (blank) base || trim(col(cl)) === "" else base
@@ -84,9 +77,12 @@ object QualityOps {
       s"not a row-level check: $other")
   }
 
+  /** Evaluate `checks` against `df` → one row per check:
+    * (check, observed, violations, pass). `observed` is the row count
+    * for row-level checks, the distinct-key count for Unique, and the
+    * distinct non-null child-key count for RefIntegrity. */
   def report(df: DataFrame, checks: Seq[Check]): DataFrame = {
     require(checks.nonEmpty, "QualityOps.report needs at least one check")
-    def viol(c: Check): Column = rowViolation(c)
     val rowLevel = checks.collect {
       case c @ (_: NotNull | _: InSet | _: Bounds | _: Satisfies) => c
     }
@@ -95,7 +91,7 @@ object QualityOps {
       else Some {
         // one scan, one agg: every row-level check is a conditional sum
         val aggs = rowLevel.zipWithIndex.map { case (c, i) =>
-          sum(when(viol(c), 1L).otherwise(0L)).as(s"_v$i") }
+          sum(when(rowViolation(c), 1L).otherwise(0L)).as(s"_v$i") }
         val agged = df.agg(count(lit(1)).as("_n"), aggs: _*)
         val one = rowLevel.zipWithIndex.map { case (c, i) =>
           struct(lit(c.name).as("check"), col("_n").as("observed"),

@@ -3,10 +3,10 @@ package graft.ops
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** The x132 mergeable quantile sketch's integer bucket algebra, shared by
-  * the batch query and the streaming twin: a positive cents value
-  * collapses to bucket b = digits·1000 + its leading three digits (values
-  * of ≤ 3 digits are stored exactly), so the sketch is pure integer math
+/** The x132 mergeable quantile sketch's integer bucket algebra: a
+  * positive cents value collapses to bucket b = digits·1000 + its
+  * leading three digits (values of ≤ 3 digits are stored exactly), so
+  * the sketch is pure integer math
   * (cross-engine exact — the leading digits come from a SUBSTRING of the
   * decimal rendering, no FP division anywhere), mergeable by count
   * addition, bounded at ~9·900 buckets, and its bucket-upper-bound

@@ -47,24 +47,6 @@ object ReshapeOps {
   def trimHeaders(df: DataFrame): DataFrame =
     df.toDF(df.columns.map(_.trim).toIndexedSeq: _*)
 
-  /** P5 — duplicate-column-name elimination, keep first occurrence
-    * (ref 591). Spark disallows duplicate names in most operators, but a
-    * join can produce them; select-by-position keeps the first. */
-  def dropDuplicateColumns(df: DataFrame): DataFrame = {
-    val seen = scala.collection.mutable.LinkedHashSet.empty[String]
-    val keepIdx = df.columns.zipWithIndex.collect {
-      case (c, i) if seen.add(c) => i
-    }
-    if (keepIdx.length == df.columns.length) df
-    else {
-      // positional: rename everything unique first (df("name") would be
-      // ambiguous), then select the first occurrence of each name
-      val names = df.columns
-      val tmp = df.toDF(names.indices.map(i => s"_pos$i"): _*)
-      tmp.select(keepIdx.map(i => col(s"_pos$i").as(names(i))).toIndexedSeq: _*)
-    }
-  }
-
   /** P7 — schema validation against an expected column list: warn, don't
     * abort (ref 457-471). Returns (ok, unexpected, missing). */
   def validateSchema(df: DataFrame, expected: Seq[String])

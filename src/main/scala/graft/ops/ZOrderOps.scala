@@ -61,15 +61,4 @@ object ZOrderOps {
       .map(i => s"(((($x) >> $i) & 1) << ${2 * i}) | " +
                 s"(((($y) >> $i) & 1) << ${2 * i + 1})")
       .mkString("(", " | ", ")")
-
-  /** Write `df` z-ordered on (`xCol`, `yCol`) into `numFiles` range-
-    * partitioned parquet files at `path`. Range boundaries come from
-    * Spark's reservoir sampling of the z-value — no global sort. */
-  def writeZOrdered(df: DataFrame, xCol: Column, yCol: Column, bits: Int,
-                    path: String, numFiles: Int): Unit =
-    df.withColumn("_z", zvalue(xCol, yCol, bits))
-      .repartitionByRange(numFiles, col("_z"))
-      .sortWithinPartitions(col("_z"))
-      .drop("_z")
-      .write.mode("overwrite").parquet(path)
 }

@@ -1062,8 +1062,8 @@ class CorpusQueriesSpec extends SparkSpec {
     // scores ilog(1)+ilog(12)−ilog(1)−ilog(20) = 896 − 1088 = −192
     assert(out(3L)._1 == 3L && out(3L)._2 == -576L, s"doc 3: ${out(3L)}")
     assert(!out(3L)._3)
-    // a single-class training split fails LOUD (the streaming twin's
-    // require, spelled as an execution-time raise_error here), never
+    // a single-class training split fails LOUD (a require spelled as
+    // an execution-time raise_error), never
     // the silent out-of-contract ilog2x256(0) path
     val oneClass = Seq((5L, "A", pos), (10L, "A", pos), (1L, "A", "zork"))
       .toDF("doc_id", "source", "text")
@@ -1149,5 +1149,23 @@ class CorpusQueriesSpec extends SparkSpec {
     assert(x150.keySet == Set(1L, 2L), s"planted dup not recovered: $x150")
     assert(x150.values.forall(_._2 >= 12L),
       s"shared prefix under tau: $x150")
+  }
+
+  test("x161 luhnScreen: valid cards redacted, off-by-one twins untouched") {
+    val docs = Seq(
+      (1L, "pay with 5260181590830164 now"),  // Luhn-valid -> redacted
+      (2L, "pay with 5260181590830165 now"),  // check digit off -> kept
+      (3L, "no digits here at all"),
+      (4L, "two 6131860913909962 and 0308246281948214 cards"))
+    val got = CorpusQueries.luhnScreen(docs.toDF("doc_id", "text"))
+      .collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
+    def md5s(s: String): String =
+      java.security.MessageDigest.getInstance("MD5")
+        .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    assert(got(1L) == Seq(1L, 1L, md5s("pay with <CARD> now")))
+    assert(got(2L) ==
+      Seq(1L, 0L, md5s("pay with 5260181590830165 now")))
+    assert(got(3L) == Seq(0L, 0L, md5s("no digits here at all")))
+    assert(got(4L) == Seq(2L, 2L, md5s("two <CARD> and <CARD> cards")))
   }
 }

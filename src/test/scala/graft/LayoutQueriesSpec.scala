@@ -67,28 +67,6 @@ class LayoutQueriesSpec extends SparkSpec {
       s"z layout touched $zHits chunks, x-sort $xHits — z must prune ≥ 2×")
   }
 
-  test("writeZOrdered: lossless, and every output file has a tight 2-D bbox") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("zord").toString
-    val pts = (for (x <- 0L until 64L; y <- 0L until 64L) yield (x, y))
-      .toDF("x", "y")
-    ZOrderOps.writeZOrdered(pts, col("x"), col("y"), 6, dir, 16)
-    val back = spark.read.parquet(dir)
-    assert(back.count() == 64 * 64)
-    val perFile = back
-      .withColumn("f", input_file_name())
-      .groupBy("f")
-      .agg(((max("x") - min("x") + 1) * (max("y") - min("y") + 1))
-        .as("area"))
-      .as[(String, Long)].collect()
-    assert(perFile.length >= 8, "range partitioner should spread files")
-    // every file's bbox must cover far less than the full 64×64 domain —
-    // the file-skipping property a 2-D box predicate relies on
-    perFile.foreach { case (f, area) =>
-      assert(area <= 64 * 64 / 4, s"file $f bbox area $area too loose")
-    }
-  }
-
   test("q95 buckets partition the curve: counts sum to table size, boxes nest") {
     val rows = run("q95_zorder_locality").collect()
     val n = Tables(spark, sfDir, "customer").count()

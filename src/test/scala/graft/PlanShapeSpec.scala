@@ -606,26 +606,6 @@ class PlanShapeSpec extends SparkSpec {
     assert(plan.contains("HashAggregate"), plan.take(3000))
   }
 
-  test("z-ordered parquet: a 2-D box predicate pushes BOTH filters to the scan") {
-    import graft.ops.ZOrderOps
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("zscan").toString
-    val pts = (for (x <- 0L until 64L; y <- 0L until 64L) yield (x, y))
-      .toDF("x", "y")
-    ZOrderOps.writeZOrdered(pts, col("x"), col("y"), 6, dir, 8)
-    val q = spark.read.parquet(dir)
-      .filter(col("x").between(0, 15) && col("y").between(0, 15))
-    val formatted = q.queryExecution.explainString(
-      org.apache.spark.sql.execution.FormattedMode)
-    // row-group stats make the pushed filters effective ONLY because the
-    // layout gave every file/row-group a tight bbox in both dims
-    assert(formatted.contains("GreaterThanOrEqual(x,0)") &&
-           formatted.contains("LessThanOrEqual(x,15)"), formatted.take(2000))
-    assert(formatted.contains("GreaterThanOrEqual(y,0)") &&
-           formatted.contains("LessThanOrEqual(y,15)"), formatted.take(2000))
-    assert(q.count() == 256)
-  }
-
   test("b03 bucketed revenue: the fact-fact join runs with NO exchange on either side") {
     val df = SparkEntry.queries("b03_bucketed_revenue")(spark, sfDir)
     df.collect() // first call lays out the bucketed tables; plan below is steady-state

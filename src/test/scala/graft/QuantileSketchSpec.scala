@@ -55,4 +55,11 @@ class QuantileSketchSpec extends SparkSpec {
     assert(est > 0L, s"estimate wrapped: $est")
     assert(est == 923L * 1000000000000000L - 1)
   }
+
+  test("bucketOf: 5299999 and 5300000 land in adjacent buckets") {
+    import graft.ops.QuantileSketchOps
+    val b = Seq(5299999L, 5300000L).toDF("c")
+      .select(QuantileSketchOps.bucketOf(col("c"))).as[Long].collect()
+    assert(b.toSeq == Seq(7529L, 7530L))
+  }
 }

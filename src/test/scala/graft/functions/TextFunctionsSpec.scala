@@ -113,4 +113,17 @@ class TextFunctionsSpec extends SparkSpec {
     def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
     assert(ham(m("a"), m("b")) < ham(m("a"), m("c")))
   }
+
+  test("docRepetition: duplicate words, top bigram, duplicate trigrams and the 9% flag") {
+    import spark.implicits._
+    val docs = Seq(
+      (1L, "spam spam spam spam ham"),           // repetitive
+      (3L, "one two one two three one two"),     // bigram 'one two' x3
+      (4L, "solo"))                              // 1 word: no bigrams
+    val got = docRepetition(docs.toDF("doc_id", "text"), "doc_id", "text")
+      .collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
+    assert(got(1L) == Seq(5L, 3L, 3L, 1L, true))  // 'spam spam' x3
+    assert(got(3L) == Seq(7L, 4L, 3L, 0L, true))  // 'one two' x3
+    assert(got(4L) == Seq(1L, 0L, 0L, 0L, false)) // no bigrams, no flag
+  }
 }

@@ -1,6 +1,7 @@
 package graft.io
 
 import java.nio.file.Files
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -134,8 +135,7 @@ class CompactionSpec extends SparkSpec {
   /** Drive the REAL sink body for `batches` micro-batches of 10 rows
     * each over three flags, into `live`. */
   private def ingest(live: String, batches: Range): Unit = {
-    val fn = graft.streaming.StreamingOps
-      .partitionedSinkBatch(live, Seq("flag"))
+    val fn = Compaction.partitionedSinkBatch(live, Seq("flag"))
     batches.foreach { b =>
       fn(sinkRows(b * 10 until (b + 1) * 10,
         i => Seq("R", "A", "N")(i % 3)), b.toLong)
@@ -273,10 +273,8 @@ class CompactionSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val root = tmp("inglive")
     val live = s"$root/live"; val comp = s"$root/compact"
-    val fn = graft.streaming.StreamingOps
-      .partitionedSinkBatch(live, Seq("flag"))
-    val mem = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(String, Long)]
+    val fn = Compaction.partitionedSinkBatch(live, Seq("flag"))
+    val mem = MemoryStream[(String, Long)]
     val sq = mem.toDS().toDF("flag", "qty").writeStream
       .foreachBatch(fn)
       .option("checkpointLocation", s"$root/ckpt")
@@ -377,8 +375,7 @@ class CompactionSpec extends SparkSpec {
     import spark.implicits._
     val root = tmp("ingup")
     val live = s"$root/live"; val comp = s"$root/compact"
-    val fn = graft.streaming.StreamingOps
-      .partitionedSinkBatch(live, Seq("flag"))
+    val fn = Compaction.partitionedSinkBatch(live, Seq("flag"))
     def batch(rows: Seq[(String, Long, Double, Boolean)], id: Long) =
       fn(rows.toDF("flag", "key", "v", "del"), id)
     def state(): Map[Long, (String, Double)] =
@@ -432,8 +429,7 @@ class CompactionSpec extends SparkSpec {
     import spark.implicits._
     val root = tmp("ingdiff")
     val live = s"$root/live"; val comp = s"$root/compact"
-    val fn = graft.streaming.StreamingOps
-      .partitionedSinkBatch(live, Seq("flag"))
+    val fn = Compaction.partitionedSinkBatch(live, Seq("flag"))
     def batch(rows: Seq[(String, Long, Double, Boolean)], id: Long) =
       fn(rows.toDF("flag", "key", "v", "del"), id)
     batch(Seq(("R", 1L, 1.0, false), ("A", 2L, 2.0, false),
@@ -469,21 +465,48 @@ class CompactionSpec extends SparkSpec {
     assert(e3.getMessage.contains("different columns"))
   }
 
-  test("planCompaction bins only sub-threshold files, never exceeds the target, skips singletons") {
-    val files = Seq(
-      ("a", 10L), ("b", 20L), ("c", 30L), ("d", 40L),
-      ("big", 500L), ("e", 25L))
-    val plan = Compaction.planCompaction(files, smallBytes = 50L,
-      targetBytes = 60L)
-    assert(plan.flatten.toSet.subsetOf(Set("a", "b", "c", "d", "e")),
-      "an already-large file must never be rewritten")
-    assert(plan.forall(g => g.size > 1), "singleton rewrites are pointless I/O")
-    val size = files.toMap
-    assert(plan.forall(g => g.map(size).sum <= 60L), s"over-target bin in $plan")
-    // first-fit decreasing: d40+b20 fill one bin, c30+e25 the next; the
-    // leftover a10 would be a singleton rewrite and is skipped
-    assert(plan === Seq(Seq("d", "b"), Seq("c", "e")), plan.toString)
-    assert(plan === Compaction.planCompaction(files.reverse, 50L, 60L),
-      "the plan must be deterministic under listing order")
+  test("partitionedSinkBatch: stream-ingested partitioned layout equals " +
+       "batch writePartitioned; a replayed batch is idempotent; the read " +
+       "still prunes partitions") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("graft_psink")
+      .toString
+    val rows1 = Seq(("R", 1L), ("A", 2L))
+    val rows2 = Seq(("R", 3L), ("N", 4L))
+    val fn = Compaction.partitionedSinkBatch(s"$dir/out", Seq("flag"),
+      "orc")
+    val mem = MemoryStream[(String, Long)]
+    val sq = mem.toDS().toDF("flag", "qty").writeStream
+      .foreachBatch(fn)
+      .option("checkpointLocation", s"$dir/ckpt")
+      .start()
+    mem.addData(rows1: _*)
+    sq.processAllAvailable()
+    mem.addData(rows2: _*)
+    sq.processAllAvailable()
+    sq.stop()
+    // failure-recovery replay of the LAST batch (the at-least-once
+    // window): the dynamic overwrite must replace, not duplicate
+    fn(rows2.toDF("flag", "qty"), 1L)
+    val streamed = spark.read.orc(s"$dir/out")
+    assert(streamed.columns.contains("_batch_id"))
+    val got = streamed.select(col("flag"), col("qty"))
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
+    // the batch twin over the same rows
+    graft.io.TableIo.writePartitioned(
+      (rows1 ++ rows2).toDF("flag", "qty"), s"$dir/batch", Seq("flag"),
+      "orc")
+    val want = spark.read.orc(s"$dir/batch")
+      .select(col("flag"), col("qty"))
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
+    assert(got == want, s"stream $got != batch $want")
+    assert(streamed.count() == 4, "replay must not duplicate rows")
+    // the business partition column is still the pruning surface
+    val plan = streamed.filter(col("flag") === "R")
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("PartitionFilters: [") && plan.contains("flag"),
+      "partition pruning lost on the stream-ingested layout:\n" +
+        plan.take(2000))
   }
 }

@@ -121,27 +121,6 @@ class CsvRoundtripSpec extends SparkSpec {
     assert(d1 == d2)
   }
 
-  test("JSONL roundtrip: schema pinned, sharded write, newline/quote/unicode content survives") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsonl").toString + "/docs"
-    val df = Seq(
-      (1L, "plain text", "en"),
-      (2L, "line\nbreak and \"quotes\" and\ttabs", "fr"),
-      (3L, "unicode: café 中文 😀", "zh"))
-      .toDF("doc_id", "text", "lang")
-    TableIo.writeJsonl(df, dir, shards = Some(2))
-    val parts = new java.io.File(dir).listFiles
-      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".json"))
-    assert(parts.length === 2, "sharded layout should write one file per shard")
-    val back = TableIo.readJsonl(spark, dir, Some(df.schema))
-      .orderBy("doc_id")
-      .as[(Long, String, String)].collect().toSeq
-    assert(back === Seq(
-      (1L, "plain text", "en"),
-      (2L, "line\nbreak and \"quotes\" and\ttabs", "fr"),
-      (3L, "unicode: café 中文 😀", "zh")))
-  }
-
   test("all-string CSV source attaches the ingest ordinal in file order") {
     val dir = Files.createTempDirectory("graft_csv2")
     Files.write(dir.resolve("in.csv"),

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import graft.ops.CacheScope
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -199,5 +200,155 @@ class GraphSearchSpec extends SparkSpec {
       GraphSearch.search(g, sn, q, seeds, beam = 0, hops = 1))
     intercept[IllegalArgumentException](
       GraphSearch.search(g, sn, q, seeds, beam = 2, hops = 9))
+  }
+
+  test("serve: the served answer over a query split equals batch GraphSearch.search") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    implicit val scope: graft.ops.CacheScope = graft.ops.CacheScope.session
+    val beam = 2; val hops = 2; val kg = 2; val k = 4
+    // three tight clusters around orthogonal axes with graded offsets —
+    // enough structure that hops genuinely move the frontier
+    val pts = (0 until 18).map { i =>
+      val axis = i % 3
+      val off = 0.03 * (i / 3)
+      (i.toLong, axis.toLong,
+       Seq.tabulate(6)(j =>
+         if (j == axis) 1.0 else if (j == 3 + axis) off else 0.0))
+    }
+    val sn = pts.toDF("vec_id", "cell", "v")
+      .withColumn("nrm", graft.functions.VectorFunctions.norm(col("v")))
+      .persist()
+    val g = graft.operators.NnDescent.build(sn, kg, rounds = 1,
+        mixBuckets = 4)
+      .select(col("u"), col("w")).persist()
+    g.count()
+    val qrows = pts.filter(_._1 < 6) // two queries per cell
+    val q = sn.filter(col("vec_id") < 6)
+      .select(col("vec_id").as("qid"), col("v").as("qv"),
+              col("nrm").as("qn"))
+    val assigned = sn.filter(col("vec_id") < 6)
+      .select(col("vec_id").as("qid"), col("cell"))
+    val seeds = graft.operators.GraphSearch.cellSeeds(assigned, sn, beam)
+    val batch = graft.operators.GraphSearch.search(g, sn, q, seeds,
+        beam, hops)
+      .filter(col("rn") <= k)
+      .select(col("qid"), col("rn").cast("long").as("rank"), col("nid"),
+              col("cos"), col("scored_n"))
+      .collect().map(_.toSeq).toSet
+
+    val artifacts = graft.operators.GraphSearch.serveShards(g, sn, beam,
+        hops).persist()
+    // the serving path is genuinely SHARDED: one row per cell, and the
+    // query split below spans several shards (never a single-shard
+    // degenerate pass)
+    assert(artifacts.count() == 3)
+    assert(qrows.map(_._2).distinct.size >= 2)
+    val mem = MemoryStream[(Long, Seq[Double], Long)]
+    val stream = mem.toDF().toDF("qid", "qv", "cell")
+      .withColumn("qn", graft.functions.VectorFunctions.norm(col("qv")))
+    val sq = GraphSearch.serve(stream, artifacts,
+        beam, hops, k)
+      .writeStream.format("memory").queryName("gserve")
+      .outputMode("append").start()
+    // split the queries across two micro-batches — per-row statelessness
+    // means the split cannot change any answer
+    mem.addData(qrows.take(3).map(p => (p._1, p._3, p._2)): _*)
+    sq.processAllAvailable()
+    mem.addData(qrows.drop(3).map(p => (p._1, p._3, p._2)): _*)
+    sq.processAllAvailable()
+    val streamed = spark.table("gserve")
+      .select(col("qid"), col("rank").cast("long"), col("nid"),
+              col("cos"), col("scored_n"))
+      .collect().map(_.toSeq).toSet
+    sq.stop()
+    assert(streamed == batch,
+      s"streamed ${streamed.size} rows != batch ${batch.size}:\n" +
+        s"only-stream: ${(streamed -- batch).take(5)}\n" +
+        s"only-batch: ${(batch -- streamed).take(5)}")
+    sn.unpersist(); g.unpersist()
+    spark.catalog.clearCache()
+  }
+
+  test("serveTop2: two-shard serve over a query split equals batch top-2 search (cells in different shard rows)") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    implicit val scope: graft.ops.CacheScope = graft.ops.CacheScope.session
+    val beam = 2; val hops = 2; val kg = 2; val k = 4
+    val pts = (0 until 18).map { i =>
+      val axis = i % 3
+      val off = 0.03 * (i / 3)
+      (i.toLong, axis.toLong,
+       Seq.tabulate(6)(j =>
+         if (j == axis) 1.0 else if (j == 3 + axis) off else 0.0))
+    }
+    val sn = pts.toDF("vec_id", "cell", "v")
+      .withColumn("nrm", graft.functions.VectorFunctions.norm(col("v")))
+      .persist()
+    val g = graft.operators.NnDescent.build(sn, kg, rounds = 1,
+        mixBuckets = 4)
+      .select(col("u"), col("w")).persist()
+    g.count()
+    // each query routes to its own cell plus a DIFFERENT second cell —
+    // the two shard rows the top-2 serve must union correctly
+    val qrows = pts.filter(_._1 < 6)
+      .map(p => (p._1, p._3, p._2, (p._2 + 1) % 3))
+    val q = sn.filter(col("vec_id") < 6)
+      .select(col("vec_id").as("qid"), col("v").as("qv"),
+              col("nrm").as("qn"))
+    // batch reference: x163's 'two'-mode seeds — per (qid, cell),
+    // members by nid ASC, self excluded, beam/2 each
+    val seedRows = for {
+      (qid, _, c1, c2) <- qrows
+      c <- Seq(c1, c2)
+      nid <- pts.filter(p => p._2 == c && p._1 != qid)
+        .map(_._1).sorted.take(beam / 2)
+    } yield (qid, nid)
+    val batch = graft.operators.GraphSearch.search(g, sn, q,
+        seedRows.toDF("qid", "nid"), beam, hops)
+      .filter(col("rn") <= k)
+      .select(col("qid"), col("rn").cast("long").as("rank"), col("nid"),
+              col("cos"), col("scored_n"))
+      .collect().map(_.toSeq).toSet
+    val artifacts = graft.operators.GraphSearch.serveShards(g, sn, beam,
+        hops).persist()
+    assert(artifacts.count() == 3)
+    val mem = MemoryStream[(Long, Seq[Double], Long, Long)]
+    val stream = mem.toDF().toDF("qid", "qv", "cell1", "cell2")
+      .withColumn("qn", graft.functions.VectorFunctions.norm(col("qv")))
+    val sq = GraphSearch.serveTop2(stream, artifacts,
+        beam, hops, k)
+      .writeStream.format("memory").queryName("gserve2")
+      .outputMode("append").start()
+    mem.addData(qrows.take(3).map(p => (p._1, p._2, p._3, p._4)): _*)
+    sq.processAllAvailable()
+    mem.addData(qrows.drop(3).map(p => (p._1, p._2, p._3, p._4)): _*)
+    sq.processAllAvailable()
+    val streamed = spark.table("gserve2")
+      .select(col("qid"), col("rank").cast("long"), col("nid"),
+              col("cos"), col("scored_n"))
+      .collect().map(_.toSeq).toSet
+    sq.stop()
+    assert(streamed == batch,
+      s"streamed ${streamed.size} rows != batch ${batch.size}:\n" +
+        s"only-stream: ${(streamed -- batch).take(5)}\n" +
+        s"only-batch: ${(batch -- streamed).take(5)}")
+    // the artifact records its build parameters; a serve call with
+    // different ones must fail before the stream starts
+    val em = intercept[IllegalArgumentException](
+      GraphSearch.serve(stream, artifacts, beam, hops + 1,
+        k))
+    assert(em.getMessage.contains("built with"))
+    val eo = intercept[IllegalArgumentException](
+      GraphSearch.serveTop2(stream, artifacts, 3, hops, k))
+    assert(eo.getMessage.contains("even"))
+    // an artifact lacking the parameter columns (a stale build) is
+    // rejected outright
+    val en = intercept[IllegalArgumentException](
+      GraphSearch.serve(stream,
+        artifacts.drop("beam", "hops"), beam, hops, k))
+    assert(en.getMessage.contains("beam/hops"))
+    sn.unpersist(); g.unpersist(); artifacts.unpersist()
+    spark.catalog.clearCache()
   }
 }

@@ -68,11 +68,4 @@ class ColumnOpsSpec extends SparkSpec {
       .as[String].collect()
     assert(out.toSeq == Seq("x", "INT", "INT", "INT", "NAN", "INT"))
   }
-
-  test("D12 extension extraction lowercases the suffix") {
-    import spark.implicits._
-    val out = Seq("A.XLSX", "b.csv", "noext", "x.tar.GZ")
-      .toDF("v").select(extensionOf(col("v")).as("e")).as[String].collect()
-    assert(out.toSeq == Seq(".xlsx", ".csv", "", ".gz"))
-  }
 }

@@ -68,11 +68,11 @@ class DedupAggJoinSpec extends SparkSpec {
     assert(JoinOps.leftJoin(left, prepped, Seq("k")).count() == 1)
   }
 
-  test("J7 guarded join warns but keeps pandas merge semantics on fan-out") {
+  test("J7 guarded join keeps pandas merge semantics on fan-out") {
     import spark.implicits._
     val left = Seq(("k1", 1)).toDF("k", "x")
     val dupLookup = Seq(("k1", "a"), ("k1", "b")).toDF("k", "t")
-    val out = JoinOps.leftJoinGuardedEager(left, dupLookup, Seq("k"), "test")
+    val out = JoinOps.leftJoinGuarded(left, dupLookup, Seq("k"), "test")
     assert(out.count() == 2) // row count changed → the guard's warn case
   }
 
@@ -125,16 +125,6 @@ class DedupAggJoinSpec extends SparkSpec {
     assert(out.columns.toSeq == Seq("id", "name", "ghost"))
     assert(out.head.isNullAt(2))
     assert(missing == Seq("c_ghost"))
-  }
-
-  test("P5 dropDuplicateColumns keeps the first occurrence") {
-    import spark.implicits._
-    val a = Seq(("x", 1)).toDF("k", "v")
-    val b = Seq(("x", 2)).toDF("k", "v2")
-    val joined = a.join(b, a("k") === b("k")) // two columns named "k"
-    val out = ReshapeOps.dropDuplicateColumns(joined)
-    assert(out.columns.count(_ == "k") == 1)
-    assert(out.select("k").head.getString(0) == "x")
   }
 
   test("P3 renameIfExists: the first present alias wins, a taken target or absent source is skipped") {

@@ -7,7 +7,7 @@ class HistoryOpsSpec extends SparkSpec {
 
   private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
-  test("validityIntervals + snapshotAt reconstruct point-in-time state") {
+  test("validityIntervals reconstruct point-in-time state") {
     import spark.implicits._
     val log = Seq(
       (1L, "k1", "bronze", ts("2024-01-01 00:00:00")),
@@ -21,10 +21,13 @@ class HistoryOpsSpec extends SparkSpec {
     val open = iv.filter(col("valid_to").isNull)
       .select("id").as[Long].collect().toSet
     assert(open == Set(3L, 4L))
-    // snapshot mid-February: k1 is silver, k2 bronze
-    val snap = HistoryOps.snapshotAt(iv, lit(ts("2024-02-15 00:00:00")))
-      .select("key", "tier").collect().map(r => (r.getString(0), r.getString(1))).toMap
-    assert(snap == Map("k1" -> "silver", "k2" -> "bronze"))
+    // mid-February falls in k1's silver interval and k2's open bronze one
+    val silver = iv.filter(col("id") === 2L)
+      .select("valid_from", "valid_to").head()
+    assert(silver.getTimestamp(0) == ts("2024-02-01 00:00:00") &&
+      silver.getTimestamp(1) == ts("2024-03-01 00:00:00"))
+    val bronze = iv.filter(col("id") === 4L).select("valid_from").head()
+    assert(bronze.getTimestamp(0) == ts("2024-01-15 00:00:00"))
     // intervals tile: each row's valid_to equals the next row's valid_from
     val k1 = iv.filter(col("key") === "k1").orderBy("valid_from")
       .select("valid_from", "valid_to").collect()
